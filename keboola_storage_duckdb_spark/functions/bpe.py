@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import BPE_REGEX
+from .util import bounded_collect
 
 __all__ = ["word_frequencies", "bpe_train", "bpe_apply",
            "token_count_bpe", "apply_merges_to_words",
@@ -219,23 +220,21 @@ def _bpe_train_driver(rows, rounds: int):
 
 
 # The (word, freq) table collects when it fits comfortably on the driver
-# — same probe discipline as graph.connected_components (row bound AND an
-# estimated-bytes bound from the same aggregate that materializes the
-# checkpoint). Past the bound the per-round distributed loop keeps every
-# step cluster-side.
-_BPE_DRIVER_ROW_LIMIT = 1_000_000
-_BPE_DRIVER_BYTE_LIMIT = 256 << 20
+# (a bounded_collect driver route — row bound AND an estimated-bytes bound
+# from the same aggregate that materializes the checkpoint). Past the
+# bound the per-round distributed loop keeps every step cluster-side.
+_BPE_DRIVER_MAX_ROWS = 1_000_000
+_BPE_DRIVER_MAX_BYTES = 256 << 20
 
 
-def bpe_train(docs: DataFrame, text_col: str, rounds: int = 3,
-              driver_limit: int = _BPE_DRIVER_ROW_LIMIT):
+def bpe_train(docs: DataFrame, text_col: str, rounds: int = 3):
     """Train ``rounds`` BPE merges; returns ``(merges, vocab_df)`` where
     merges is a list of dicts {rnd, left_sym, right_sym, merged,
     pair_count} (1-based rounds, learned order = priority order) and
     vocab_df holds (word, freq, seq) with every merge applied — the
     word-level tokenization ``bpe_apply`` joins back to documents.
 
-    Vocabularies under ``driver_limit`` words (and the byte bound —
+    Vocabularies under ``_BPE_DRIVER_MAX_ROWS`` words (and the byte bound —
     probed with the same aggregate that materializes the checkpoint)
     train entirely driver-side via :func:`_bpe_train_driver`: one
     corpus scan, ONE collect, then all rounds at Python speed — the
@@ -249,29 +248,26 @@ def bpe_train(docs: DataFrame, text_col: str, rounds: int = 3,
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     wf = word_frequencies(docs, text_col).localCheckpoint(eager=False)
-    if driver_limit:
-        probe = wf.agg(F.count(F.lit(1)).alias("n"),
-                       F.avg(F.length("word")).alias("w")).collect()[0]
-        n = probe["n"]
-        est_bytes = n * ((probe["w"] or 0) + 120)
-        if n <= driver_limit and est_bytes <= _BPE_DRIVER_BYTE_LIMIT:
-            import pandas as pd
+    tbl = bounded_collect(wf.select("word", "freq"), _BPE_DRIVER_MAX_ROWS,
+                          _BPE_DRIVER_MAX_BYTES,
+                          row_bytes=F.length("word") + F.lit(120))
+    if tbl is not None:
+        import pandas as pd
 
-            # Arrow both ways (toPandas / pandas createDataFrame): no
-            # per-Row objects at the 1M-word bound (graph.py r16
-            # precedent)
-            pdf = wf.select("word", "freq").toPandas()
-            rows = list(zip(pdf["word"], pdf["freq"]))
-            merges, seqs = _bpe_train_driver(rows, rounds)
-            if not rows:
-                return merges, docs.sparkSession.createDataFrame(
-                    [], "word string, freq long, seq array<string>")
-            vocab = docs.sparkSession.createDataFrame(
-                pd.DataFrame({"word": pdf["word"],
-                              "freq": pdf["freq"].astype("int64"),
-                              "seq": seqs}),
-                "word string, freq long, seq array<string>")
-            return merges, vocab
+        # Arrow both ways (toArrow / pandas createDataFrame): no per-Row
+        # objects at the 1M-word bound
+        pdf = tbl.to_pandas()
+        rows = list(zip(pdf["word"], pdf["freq"]))
+        merges, seqs = _bpe_train_driver(rows, rounds)
+        if not rows:
+            return merges, docs.sparkSession.createDataFrame(
+                [], "word string, freq long, seq array<string>")
+        vocab = docs.sparkSession.createDataFrame(
+            pd.DataFrame({"word": pdf["word"],
+                          "freq": pdf["freq"].astype("int64"),
+                          "seq": seqs}),
+            "word string, freq long, seq array<string>")
+        return merges, vocab
     seq_words = (wf.select("word", "freq", F.split("word", "").alias("seq"))
                    .localCheckpoint(eager=False))
     merges: list[dict] = []

@@ -18,22 +18,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Driver-Lloyd crossover bound (r16 opt; the graph.connected_components /
-# bpe_train discipline): when rows × dim stays under this many floats the
-# vectors collect ONCE (~64 MB of float64 at the default) and every Lloyd
-# round runs in numpy with the IDENTICAL sequential per-dim fold — each
-# distributed round otherwise pays a Spark job plus re-codegen of the
-# fresh centroid-literal expression. Past the bound (or for exotic id
-# types / null-or-ragged vectors) the distributed loop serves unchanged,
-# so a 100 TB corpus never collects.
+from .util import bounded_collect
+
+# Driver-Lloyd crossover bound (a bounded_collect driver route like
+# graph.connected_components / bpe_train): when rows × dim stays under
+# this many floats the vectors collect ONCE (~64 MB of float64 at the
+# bound) and every Lloyd round runs in numpy with the IDENTICAL
+# sequential per-dim fold — each distributed round otherwise pays a
+# Spark job plus re-codegen of the fresh centroid-literal expression.
+# Past the bound (or for exotic id types / null-or-ragged vectors) the
+# distributed loop serves unchanged, so a 100 TB corpus never collects.
 _DRIVER_LLOYD_MAX_FLOATS = 8_000_000
 
 
-def _lloyd_collect(base: DataFrame, limit: int):
+def _lloyd_collect(base: DataFrame):
     """Bounded vector collect for the driver-Lloyd crossover: returns
     (ids, X float64 matrix) or None when the gates refuse (size, id
-    type, null/ragged/non-finite vectors, or values that are not
-    float32-exact). One narrow probe agg + one toPandas.
+    type, empty input, null/ragged/non-finite vectors, or values that
+    are not float32-exact). One probe agg (rows, Σ vector length) + one
+    collect, both inside :func:`~.util.bounded_collect`.
 
     Exactness gates (ADVICE r16): a NULL/NaN ELEMENT inside a vector
     becomes NaN in X and poisons every mean (the distributed F.avg
@@ -47,19 +50,19 @@ def _lloyd_collect(base: DataFrame, limit: int):
     import numpy as np
 
     id_t = dict(base.dtypes).get("id", "")
-    if not (id_t in ("bigint", "int", "smallint", "tinyint", "string")
-            and limit):
+    if id_t not in ("bigint", "int", "smallint", "tinyint", "string"):
         return None
-    row = base.agg(F.count(F.lit(1)).alias("n"),
-                   F.min(F.size("v")).alias("dmin"),
-                   F.max(F.size("v")).alias("dmax")).first()
-    n, dmin, dmax = (int(row["n"] or 0), int(row["dmin"] or 0),
-                     int(row["dmax"] or 0))
-    if n == 0 or dmin != dmax or dmin <= 0 or n * dmax > limit:
+    tbl = bounded_collect(base, _DRIVER_LLOYD_MAX_FLOATS,
+                          8 * _DRIVER_LLOYD_MAX_FLOATS,
+                          row_bytes=8 * F.size("v"))
+    if tbl is None or tbl.num_rows == 0:
         return None
-    pdf = base.toPandas()
+    pdf = tbl.to_pandas()
     if pdf["v"].isna().any() or pdf["id"].isna().any():
         return None
+    dims = {len(v) for v in pdf["v"]}
+    if len(dims) != 1 or 0 in dims:
+        return None                      # ragged or empty vectors
     X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
     if not np.isfinite(X).all():
         return None
@@ -192,21 +195,20 @@ def _assign_frame(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
 
 
 def kmeans(vectors: DataFrame, id_col: str, vec_col: str, k: int = 4,
-           max_iter: int = 10,
-           driver_float_limit: int = _DRIVER_LLOYD_MAX_FLOATS) -> DataFrame:
+           max_iter: int = 10) -> DataFrame:
     """(id, cluster) hard assignments after Lloyd iterations (≤max_iter,
     stops early when assignments are stable).
 
-    Under ``driver_float_limit`` (rows × dim) the iteration runs
+    Under ``_DRIVER_LLOYD_MAX_FLOATS`` (rows × dim) the iteration runs
     driver-side on ONE bounded collect with the identical sequential
     fold arithmetic, md5 seed order, lower-cluster ties and
     stability rule — bit-equal centroids (pytest-pinned vs the
     distributed loop); only the FINAL assignment map stays a Spark
     frame. Saves one job + one fresh centroid-literal codegen per
-    round (r16 opt). 0 disables."""
+    round."""
     base = vectors.select(F.col(id_col).alias("id"),
                           F.col(vec_col).alias("v"))
-    got = _lloyd_collect(base, driver_float_limit)
+    got = _lloyd_collect(base)
     if got is not None:
         import numpy as np
 
@@ -264,8 +266,7 @@ def kmeans(vectors: DataFrame, id_col: str, vec_col: str, k: int = 4,
 
 
 def kmeans_fit(vectors: DataFrame, id_col: str, vec_col: str, k: int = 8,
-               rounds: int = 2,
-               driver_float_limit: int = _DRIVER_LLOYD_MAX_FLOATS):
+               rounds: int = 2):
     """Fixed-round Lloyd TRAINING that also returns the model: exactly
     ``rounds`` assignment passes from the md5-seeded init (the
     bit-reproducible kmeans_fixed contract — no early stop, no RNG),
@@ -281,7 +282,7 @@ def kmeans_fit(vectors: DataFrame, id_col: str, vec_col: str, k: int = 8,
     def _assign(cents):
         return _assign_frame(base, cents).localCheckpoint(eager=False)
 
-    got = _lloyd_collect(base, driver_float_limit)
+    got = _lloyd_collect(base)
     if got is not None:
         # Driver-Lloyd crossover (r16 opt): identical seeds, folds, tie
         # and empty-cluster rules — bit-equal centroids pytest-pinned vs
@@ -433,8 +434,7 @@ def _dist_to_assigned(centroids: list[list[float]]) -> F.Column:
 
 def semdedup_keep(vectors: DataFrame, id_col: str, vec_col: str,
                   k: int = 4, rounds: int = 2,
-                  threshold: float = 0.35,
-                  blocked_gemm_limit: int = 100_000) -> DataFrame:
+                  threshold: float = 0.35) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     deduplication that never compares across clusters: k-means the
     embeddings (the certified fixed-round ``kmeans_fit`` chain — md5
@@ -454,14 +454,13 @@ def semdedup_keep(vectors: DataFrame, id_col: str, vec_col: str,
     The keep-first rule is intentionally non-transitive (direct pairs
     only, no connected components): it is the published recipe's
     behavior and keeps the decision embarrassingly parallel per
-    cluster. The transitive variant is ``near_dedup_keep``.
-    ``blocked_gemm_limit`` forwards the cosine kernel's broadcast gate:
-    raise it explicitly when the corpus fits executor memory so the
-    per-cluster products run through the BLAS candidate stage; past
-    broadcastable sizes the co-partitioned per-cluster join is the
-    distributed path (slow on one box, scales across executors)."""
+    cluster. The transitive variant is ``near_dedup_keep``. The cosine
+    kernel's broadcast gate (a driver route) picks the BLAS candidate
+    stage for corpora that fit it; past it the co-partitioned
+    per-cluster join is the distributed path (slow on one box, scales
+    across executors)."""
     labeled, _ = kmeans_fit(vectors, id_col, vec_col, k=k, rounds=rounds)
-    dropped = _semdedup_dropped(labeled, threshold, blocked_gemm_limit) \
+    dropped = _semdedup_dropped(labeled, threshold) \
         .withColumn("__dup", F.lit(True))
     return (labeled.join(dropped, "id", "left")
                    .select("id", "cluster",
@@ -537,23 +536,20 @@ def prototype_prune(vectors: DataFrame, id_col: str, vec_col: str,
 # same centroids routes identically).
 # ---------------------------------------------------------------------------
 
-def _semdedup_dropped(labeled: DataFrame, threshold: float,
-                      blocked_gemm_limit: int = 100_000) -> DataFrame:
+def _semdedup_dropped(labeled: DataFrame, threshold: float) -> DataFrame:
     """Distinct ids dropped by the keep-first rule over within-cluster
     round-6 cosine pairs of a ``(id, v, cluster)`` frame."""
     from .similarity import cosine_near_dup_pairs
 
     pairs = cosine_near_dup_pairs(labeled, "id", "v",
-                                  threshold=threshold, block_col="cluster",
-                                  blocked_gemm_limit=blocked_gemm_limit)
+                                  threshold=threshold, block_col="cluster")
     return pairs.select(F.col("id_b").alias("id")).distinct()
 
 
 def semdedup_index_build(vectors: DataFrame, id_col: str, vec_col: str,
                          path: str, k: int = 4, rounds: int = 2,
                          threshold: float = 0.35,
-                         fingerprint: str | None = None,
-                         blocked_gemm_limit: int = 100_000) -> dict:
+                         fingerprint: str | None = None) -> dict:
     """Train (certified fixed-round Lloyd) + batch SemDeDup the corpus,
     persisting ONLY the survivors partitioned by cluster plus the frozen
     centroids — the state an ingestion-time semantic-dup check needs.
@@ -565,7 +561,7 @@ def semdedup_index_build(vectors: DataFrame, id_col: str, vec_col: str,
     labeled, centroids = kmeans_fit(vectors, id_col, vec_col, k=k,
                                     rounds=rounds)
     labeled = labeled.localCheckpoint(eager=False)
-    dropped = _semdedup_dropped(labeled, threshold, blocked_gemm_limit)
+    dropped = _semdedup_dropped(labeled, threshold)
     kept = labeled.join(dropped, "id", "left_anti")
     staging = _make_staging(path)
     (kept.write.mode("overwrite").partitionBy("cluster")
@@ -607,8 +603,7 @@ def _semdedup_assign_delta(meta: dict, delta: DataFrame,
 
 def _semdedup_verdict_frames(spark, path: str, delta: DataFrame,
                              id_col: str, vec_col: str,
-                             broadcast_delta_limit: int,
-                             blocked_gemm_limit: int):
+                             broadcast_delta_limit: int):
     """``(verdict, assigned)`` for a delta — the shared core of
     query/add, so add never routes the delta twice. Both frames are
     lazily checkpointed; ``assigned`` is (id, v, cluster)."""
@@ -646,7 +641,7 @@ def _semdedup_verdict_frames(spark, path: str, delta: DataFrame,
          .filter((F.col("id_a") != F.col("id_b")) &
                  (F.round(cosine_expr("va", "vb", "na", "nb"), 6) >= t))
          .select(F.col("id_b").alias("id")))
-    dropped_within = _semdedup_dropped(assigned, t, blocked_gemm_limit)
+    dropped_within = _semdedup_dropped(assigned, t)
     dropped = dropped_by_stored.union(dropped_within.select("id")) \
                                .distinct().withColumn("__dup", F.lit(True))
     verdict = (assigned.join(dropped, "id", "left")
@@ -658,8 +653,7 @@ def _semdedup_verdict_frames(spark, path: str, delta: DataFrame,
 
 def semdedup_index_query(spark, path: str, delta: DataFrame,
                          id_col: str, vec_col: str,
-                         broadcast_delta_limit: int = 100_000,
-                         blocked_gemm_limit: int = 100_000) -> DataFrame:
+                         broadcast_delta_limit: int = 100_000) -> DataFrame:
     """Ingestion-time semantic near-dup verdict for a delta against the
     persisted index: each delta vector routes to its frozen-centroid
     cluster, then is dropped iff a STORED SURVIVOR of that cluster
@@ -676,15 +670,13 @@ def semdedup_index_query(spark, path: str, delta: DataFrame,
     posting-list partition layout). The corpus is never re-scored; cost
     = |delta| routing + within-routed-list products."""
     verdict, _ = _semdedup_verdict_frames(spark, path, delta, id_col,
-                                          vec_col, broadcast_delta_limit,
-                                          blocked_gemm_limit)
+                                          vec_col, broadcast_delta_limit)
     return verdict
 
 
 def semdedup_index_add(spark, path: str, delta: DataFrame,
                        id_col: str, vec_col: str,
-                       broadcast_delta_limit: int = 100_000,
-                       blocked_gemm_limit: int = 100_000) -> DataFrame:
+                       broadcast_delta_limit: int = 100_000) -> DataFrame:
     """Query the delta, then append ONLY its keepers to the survivor
     lists (frozen centroids — no retrain, no rewrite of existing
     postings; the minhash_index_add discipline). A later delta then
@@ -699,8 +691,7 @@ def semdedup_index_add(spark, path: str, delta: DataFrame,
     import os
 
     verdict, assigned = _semdedup_verdict_frames(
-        spark, path, delta, id_col, vec_col, broadcast_delta_limit,
-        blocked_gemm_limit)
+        spark, path, delta, id_col, vec_col, broadcast_delta_limit)
     keepers = assigned.join(verdict.filter("keep").select("id"), "id")
     hit = [r.cluster for r in
            keepers.select("cluster").distinct().collect()]  # <= k values

@@ -27,11 +27,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .util import bounded_collect
 from .util import par as _par
 
-# Byte bound on the containment brute route's (id, text) collect — past
-# it nothing is ever collected and the candidate-join routes serve.
+# n-gram brute GEMM routes (bounded_collect driver routes): the (id, text)
+# collect is bounded by rows and by text + id bytes — past it nothing is
+# ever collected and the candidate-join routes serve. The doc×vocab
+# float32 bit matrix is bounded by vocabulary and by cells (64 MB at the
+# cell bound); |A∩B| ≤ vocab « 2²⁴, so every float32 count is exact.
+# _DENSE_VOCAB_MAX also gates containment's Spark-side bitmask route.
 _BRUTE_COLLECT_BYTES = 64 << 20
+_BRUTE_MAX_CELLS = 16_000_000
+_DENSE_VOCAB_MAX = 8192
 
 
 def word_tokens(text_col: str | Column) -> Column:
@@ -316,7 +323,12 @@ def simhash(docs: DataFrame, id_col: str, text_col: str,
     higher-order lambdas, which Spark INTERPRETS row-at-a-time (the
     NOTES HOF lesson) — calm noop-sink A/B 1.22 s vs 0.45 s at sf0.1.
     Unlike the bounded driver crossovers this is a distributed map: it
-    parallelizes at any corpus size."""
+    parallelizes at any corpus size.
+
+    ``bits`` must lie in 1..32: token hashes are 32-bit, and the Arrow
+    kernel's ``uint32`` shift past its width is undefined."""
+    if not 1 <= bits <= 32:
+        raise ValueError(f"bits must be in 1..32, got {bits}")
     base = (docs.where(F.col(text_col).isNotNull())
                 .repartition(_par(docs))  # fan hash work off 1-split inputs
                 .select(F.col(id_col).alias("id"),
@@ -421,36 +433,61 @@ def simhash_pairs(docs: DataFrame, id_col: str, text_col: str,
              .filter(F.col("hamming") <= max_hamming))
 
 
-def _jaccard_brute_gemm(docs: DataFrame, id_col: str, text_col: str,
-                        texts_pdf, threshold: float, hashed_verify: bool,
-                        adaptive: bool, density_limit: int,
-                        dense_vocab_limit: int,
-                        brute_cells_limit: int) -> DataFrame | None:
-    """Candidate-free Jaccard verification for small dense corpora (r17
-    opt — the containment ``_containment_brute_gemm`` template applied
-    to the symmetric form): shingle the collected texts in Python, build
-    the doc×vocab float32 bit matrix, and verify ALL unordered pairs
-    with one GEMM per task. |A∩B| ≤ vocab ≤ dense_vocab_limit « 2²⁴, so
-    every float32 count is an exact integer; jaccard =
-    double(inter) / (na + nb − inter) is the identical IEEE division the
-    array-verify route computes, and the accept (jaccard ≥ threshold)
-    the identical double compare — so rows are bit-equal to the
-    candidate routes (pytest-pinned).
+def _brute_texts(docs: DataFrame, id_col: str, text_col: str,
+                 max_rows: int):
+    """The brute routes' one bounded (id, text) collect as pandas, or
+    None past the row / byte bound. Bytes count the ids too: a corpus of
+    tiny texts with long string ids must not pass on text bytes alone."""
+    tbl = bounded_collect(
+        docs.select(id_col, text_col), max_rows, _BRUTE_COLLECT_BYTES,
+        row_bytes=(F.coalesce(F.length(F.col(text_col)), F.lit(0))
+                   + F.coalesce(F.length(F.col(id_col).cast("string")),
+                                F.lit(0))))
+    return None if tbl is None else tbl.to_pandas()
 
-    ``hashed_verify`` parity: the candidate route intersects arrays of
-    truncated-md5 int64s, so a 60-bit collision would MERGE two shingles
-    there — the brute route therefore hashes the (tiny) vocabulary with
-    the same md5-prefix map and merges collided columns, while ``na``
-    stays the pre-merge distinct-string count (= the hashed ARRAY length
-    the route's F.size measures). ``adaptive`` parity: when the Σdf²
-    density probe would reroute the candidate path to the sub-recall LSH
-    form, the brute route refuses (it could only return the EXACT
-    answer); df here is the same per-hashed-shingle document frequency,
-    summed as exact integers.
 
-    Returns None when any gate refuses (vocab/cells density, null ids,
+def _brute_gemm(docs: DataFrame, id_col: str, text_col: str, texts_pdf,
+                hashed_verify: bool, min_shingles: int, out_schema,
+                accept, density_limit: int | None = None
+                ) -> DataFrame | None:
+    """Candidate-free bigram-pair verification for small dense corpora —
+    the shared kernel of the jaccard and containment brute routes.
+    Given the bounded (id, text) collect, shingle in plain Python (the
+    Spark-side interpreted transform()/array_distinct
+    expression measured ~2 s calm for 255k shingles; the Python loop is
+    ~0.1 s), build the doc×vocab float32 bit matrix with one
+    pd.factorize + fancy assign, broadcast it, and compute |A∩B| for
+    every doc against all docs as one GEMM per task over a position
+    frame. ``accept(ixs, inter, ids, lens)`` turns a batch's
+    intersection block into output rows of ``out_schema``: the accept
+    rule, pair orientation and self/duplicate-id exclusion are the
+    caller's. No candidate join, no pair shuffle, no tokenize job.
+
+    Docs with fewer than ``min_shingles`` distinct shingles are left
+    out (their shingles still count toward the vocabulary bound).
+
+    ``hashed_verify`` parity: the candidate routes intersect arrays of
+    truncated-md5 int64s, so a 60-bit collision would MERGE two
+    shingles there — the vocabulary is hashed with the same md5-prefix
+    map and collided columns merge, while ``lens`` stays the pre-merge
+    distinct-string count (= the hashed ARRAY length F.size measures).
+    ``density_limit`` (jaccard's adaptive parity): when the Σdf² density
+    probe would reroute the candidate path to the sub-recall LSH form,
+    the exact brute route refuses; df is the same per-hashed-shingle
+    document frequency, summed as exact integers.
+
+    Returns None when any gate refuses (null ids, vocab/cells density,
     adaptive density) — the caller falls through to the candidate
-    routes. Broadcast lifetime note: same as the containment route."""
+    routes. Early abort: vocab only grows, so once the RUNNING vocab
+    proves the density gates unreachable the loop stops — a sparse 10×
+    corpus rejects within its first documents (measured 21 s at 50k
+    docs before this guard).
+
+    Broadcast lifetime: the (ids, lens, bits) broadcast —
+    up to ~64 MB — stays referenced by the returned DataFrame's task
+    closure (the plan is lazy and re-executable), so it lives until the
+    DataFrame is garbage-collected, when Spark's ContextCleaner
+    unpersists it."""
     import hashlib
 
     import numpy as np
@@ -459,8 +496,11 @@ def _jaccard_brute_gemm(docs: DataFrame, id_col: str, text_col: str,
     spark = docs.sparkSession
     if texts_pdf[id_col].isna().any():
         return None
-    v_bound = min(dense_vocab_limit,
-                  brute_cells_limit // max(len(texts_pdf), 1))
+    v_bound = min(_DENSE_VOCAB_MAX,
+                  _BRUTE_MAX_CELLS // max(len(texts_pdf), 1))
+    # Python twin of shingle_arrays: literal single-space split
+    # (trailing/consecutive-space empties kept by both Spark's regex
+    # split and str.split(" ")), adjacent-bigram shingles, per-doc sets.
     vocab_seen: set = set()
     ids_l, sets_l = [], []
     for doc_id, text in zip(texts_pdf[id_col], texts_pdf[text_col]):
@@ -469,82 +509,50 @@ def _jaccard_brute_gemm(docs: DataFrame, id_col: str, text_col: str,
         vocab_seen.update(s)
         if len(vocab_seen) > v_bound:
             return None
-        ids_l.append(doc_id)
-        sets_l.append(list(s))
-    lens = np.array([len(s) for s in sets_l], dtype=np.int64)
+        if len(s) >= min_shingles:
+            ids_l.append(doc_id)
+            sets_l.append(list(s))
     n_docs = len(ids_l)
-    id_t = docs.schema[id_col].dataType
-    out_schema = T.StructType([
-        T.StructField("id_a", id_t),
-        T.StructField("id_b", id_t),
-        T.StructField("jaccard", T.DoubleType()),
-    ])
     if n_docs == 0:
         return spark.createDataFrame([], out_schema)
-    all_vals = np.concatenate([np.asarray(s, dtype=object)
-                               for s in sets_l]) if lens.sum() else \
-        np.array([], dtype=object)
-    codes, uniq = pd.factorize(all_vals)
-    if hashed_verify and len(uniq):
-        # same truncated-md5 map as the Spark transform; collided
-        # shingles share a column exactly like array_intersect on the
-        # hashed arrays would merge them
+    lens = np.array([len(s) for s in sets_l], dtype=np.int64)
+    # factorize = hash-based shingle→column bijection at C speed; the
+    # column order is internal, any bijection yields identical counts
+    codes, uniq = pd.factorize(np.concatenate(
+        [np.asarray(s, dtype=object) for s in sets_l]))
+    vocab_n = len(uniq)
+    if hashed_verify and vocab_n:
         hvals = np.array([int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
                           for s in uniq], dtype=np.int64)
         hcodes, huniq = pd.factorize(hvals)
-        codes = hcodes[codes]
-        vocab_n = len(huniq)
-    else:
-        vocab_n = len(uniq)
-    if (vocab_n > dense_vocab_limit
-            or n_docs * max(vocab_n, 1) > brute_cells_limit):
+        codes, vocab_n = hcodes[codes], len(huniq)
+    if (vocab_n > _DENSE_VOCAB_MAX
+            or n_docs * max(vocab_n, 1) > _BRUTE_MAX_CELLS):
         return None
-    if adaptive and vocab_n:
+    if density_limit is not None and vocab_n:
         df_counts = np.bincount(codes, minlength=vocab_n).astype(np.int64)
         if int((df_counts * df_counts).sum()) > density_limit:
             return None                    # sub-recall LSH route owns it
     bits = np.zeros((n_docs, vocab_n), dtype=np.float32)
-    if lens.sum():
-        bits[np.repeat(np.arange(n_docs), lens), codes] = 1.0
-    ids_all = np.asarray(ids_l)
-    bc = spark.sparkContext.broadcast((ids_all, lens, bits))
+    bits[np.repeat(np.arange(n_docs), lens), codes] = 1.0
+    bc = spark.sparkContext.broadcast((np.asarray(ids_l), lens, bits))
+    # every doc is an A row exactly once, so each pair is seen once per
+    # orientation; self-pairs are excluded by position in ``accept``
     a_side = (spark.createDataFrame(
         pd.DataFrame({"_ix": np.arange(n_docs, dtype=np.int64)}),
         schema=T.StructType([T.StructField("_ix", T.LongType())]))
         .repartition(_par(docs)))
-    thr = float(threshold)
 
     def verify(batches):
         import numpy as np
-        import pandas as pd
 
-        ids_b, n_b, bits_b = bc.value
-        pos = np.arange(len(ids_b))
+        ids_b, lens_b, bits_b = bc.value
         for b in batches:
             if len(b) == 0:
                 continue
             ixs = b["_ix"].to_numpy()
             inter = (bits_b[ixs] @ bits_b.T).astype(np.int64)
-            # each unordered pair once: position j strictly after i, and
-            # at least one shared shingle (candidate routes only ever
-            # see pairs sharing a prefix shingle — also kills the 0/0)
-            cand = (inter >= 1) & (pos[None, :] > ixs[:, None])
-            ai, bi = np.nonzero(cand)
-            iv = inter[ai, bi]
-            na = n_b[ixs[ai]]
-            nb = n_b[bi]
-            jac = iv.astype(np.float64) / (na + nb - iv)
-            keep = jac >= thr
-            ai, bi, jac = ai[keep], bi[keep], jac[keep]
-            a_ids, b_ids = ids_b[ixs[ai]], ids_b[bi]
-            neq = a_ids != b_ids           # duplicate ids never self-pair
-            a_ids, b_ids, jac = a_ids[neq], b_ids[neq], jac[neq]
-            swap = a_ids > b_ids           # emit (min, max) by id value
-            yield pd.DataFrame({
-                "id_a": np.where(swap, b_ids, a_ids),
-                "id_b": np.where(swap, a_ids, b_ids),
-                "jaccard": jac,
-            })
+            yield accept(ixs, inter, ids_b, lens_b)
 
     return a_side.mapInPandas(verify, out_schema)
 
@@ -556,9 +564,7 @@ def ngram_jaccard_prefix_pairs(docs: DataFrame, id_col: str, text_col: str,
                                adaptive: bool = False,
                                density_limit: int = 200_000_000,
                                max_doc_freq_cap: int = 1_000,
-                               dense_route: str = "lsh",
-                               dense_vocab_limit: int = 8192,
-                               brute_cells_limit: int = 16_000_000
+                               dense_route: str = "lsh"
                                ) -> DataFrame:
     """Exact bigram-Jaccard pairs via PREFIX FILTERING (the PPJoin family —
     Vernica et al., "Efficient Parallel Set-Similarity Joins Using
@@ -599,30 +605,51 @@ def ngram_jaccard_prefix_pairs(docs: DataFrame, id_col: str, text_col: str,
     shingles. Below ``density_limit`` nothing changes: candidates and
     results stay exactly the certified-oracle answer.
 
-    ``brute_cells_limit`` (r17 opt, 0 disables — the containment brute
-    template): when the corpus is small (raw texts under
-    ``_BRUTE_COLLECT_BYTES``) and dense (docs × vocab ≤ this many bit
-    cells), candidates are skipped entirely and all pairs are verified
-    by one float32 GEMM per task (``_jaccard_brute_gemm``; bit-equal
-    rows, pytest-pinned, incl. hashed-verify collision semantics and the
-    adaptive density reroute). Past any gate the candidate routes below
-    serve unchanged — a 100 TB corpus never collects anything.
+    Brute route (a driver route, shared with containment): when the
+    corpus is small (ids + texts under ``_BRUTE_COLLECT_BYTES``) and
+    dense (docs × vocab ≤ ``_BRUTE_MAX_CELLS`` bit cells), candidates
+    are skipped entirely and all pairs are verified by one float32 GEMM
+    per task (``_brute_gemm``; bit-equal rows, pytest-pinned, incl.
+    hashed-verify collision semantics and the adaptive density
+    reroute). Past any gate the candidate routes below serve unchanged
+    — a 100 TB corpus never collects anything.
     """
     from pyspark.sql import Window
 
-    if brute_cells_limit:
-        _q = docs.agg(
-            F.count(F.lit(1)).alias("d"),
-            F.sum(F.length(F.col(text_col))).alias("b")).first()
-        q_docs, q_bytes = int(_q["d"] or 0), int(_q["b"] or 0)
-        if q_docs <= brute_cells_limit and q_bytes <= _BRUTE_COLLECT_BYTES:
-            texts_pdf = docs.select(id_col, text_col).toPandas()
-            out = _jaccard_brute_gemm(
-                docs, id_col, text_col, texts_pdf, threshold,
-                hashed_verify, adaptive, density_limit,
-                dense_vocab_limit, brute_cells_limit)
-            if out is not None:
-                return out
+    texts_pdf = _brute_texts(docs, id_col, text_col, _BRUTE_MAX_CELLS)
+    if texts_pdf is not None:
+        thr = float(threshold)
+
+        def accept(ixs, inter, ids, lens):
+            import numpy as np
+            import pandas as pd
+
+            # each unordered pair once: position j strictly after i, and
+            # at least one shared shingle (candidate routes only ever see
+            # pairs sharing a prefix shingle — also kills the 0/0)
+            pos = np.arange(len(ids))
+            ai, bi = np.nonzero((inter >= 1) & (pos[None, :] > ixs[:, None]))
+            iv = inter[ai, bi]
+            na, nb = lens[ixs[ai]], lens[bi]
+            jac = iv.astype(np.float64) / (na + nb - iv)
+            keep = jac >= thr
+            a_ids, b_ids, jac = ids[ixs[ai]][keep], ids[bi][keep], jac[keep]
+            neq = a_ids != b_ids           # duplicate ids never self-pair
+            a_ids, b_ids, jac = a_ids[neq], b_ids[neq], jac[neq]
+            swap = a_ids > b_ids           # emit (min, max) by id value
+            return pd.DataFrame({"id_a": np.where(swap, b_ids, a_ids),
+                                 "id_b": np.where(swap, a_ids, b_ids),
+                                 "jaccard": jac})
+
+        id_t = docs.schema[id_col].dataType
+        out = _brute_gemm(
+            docs, id_col, text_col, texts_pdf, hashed_verify, 0,
+            T.StructType([T.StructField("id_a", id_t),
+                          T.StructField("id_b", id_t),
+                          T.StructField("jaccard", T.DoubleType())]),
+            accept, density_limit if adaptive else None)
+        if out is not None:
+            return out
 
     arr = shingle_arrays(docs, id_col, text_col)
     if hashed_verify:
@@ -958,141 +985,11 @@ def minhash_index_query(spark, path: str, new_docs: DataFrame,
     return _verify_pairs_with_arrays(cands, arr_all, threshold)
 
 
-def _containment_brute_gemm(docs: DataFrame, id_col: str,
-                            text_col: str,
-                            texts_pdf, min_shingles: int,
-                            threshold_num: int, threshold_den: int,
-                            dense_vocab_limit: int,
-                            brute_cells_limit: int) -> DataFrame | None:
-    """Candidate-free containment verification for small dense corpora
-    (r16 opt): given the collected (id, text) table — bounded by the
-    caller's byte/row gate — shingle in plain Python (the Spark-side
-    interpreted transform()/array_distinct expression measured ~2 s calm
-    for 255k shingles; the Python loop is ~0.1 s), build the doc×vocab
-    bit matrix with one pd.factorize + fancy assign, broadcast it, and
-    compute |A∩B| for ALL ordered pairs as one float32 GEMM per task
-    over position rows. Intersections never exceed vocab ≤
-    dense_vocab_limit « 2^24, so every float32 count is an exact integer.
-    No candidate join, no pair shuffle, no tokenize job: the whole Spark
-    side is one mapInPandas over a tiny position frame.
-
-    Returns None when the tokenized corpus fails the density gates
-    (vocab > dense_vocab_limit or docs·vocab > brute_cells_limit) — the
-    caller falls back to the candidate-join routes (the collect was
-    byte-bounded, so the wasted probe is a bounded constant).
-
-    Broadcast lifetime (ADVICE r16): the (ids, lens, bits) broadcast —
-    up to ~64 MB — stays referenced by the returned DataFrame's task
-    closure (it must: the plan is lazy and re-executable), so it lives
-    until the DataFrame is garbage-collected, at which point Spark's
-    ContextCleaner unpersists it. Sessions that call this in a loop and
-    keep every result frame alive accumulate one bounded broadcast per
-    LIVE frame; dropping the frame reference releases it."""
-    import numpy as np
-    import pandas as pd
-
-    spark = docs.sparkSession
-    id_t = docs.schema[id_col].dataType
-    out_schema = T.StructType([
-        T.StructField("contained", id_t),
-        T.StructField("container", id_t),
-        T.StructField("n_contained", T.IntegerType()),
-        T.StructField("inter", T.IntegerType()),
-    ])
-    num, den = threshold_num, threshold_den
-
-    def _finish(pairs: DataFrame) -> DataFrame:
-        return pairs.withColumn(
-            "containment", F.col("inter").cast("double")
-            / F.col("n_contained").cast("double"))
-
-    # Python twin of shingle_arrays + the min_shingles filter: literal
-    # single-space split (trailing/consecutive-space empties kept by both
-    # Spark's regex split and str.split(" ")), adjacent-bigram shingles,
-    # per-doc set semantics. Early abort: vocab only grows, so once the
-    # RUNNING vocab proves the density gates unreachable the loop stops —
-    # a sparse 10× corpus rejects within its first documents instead of
-    # paying the whole driver tokenize (measured 21 s at 50k docs before
-    # this guard). Routing-only: both routes emit identical rows.
-    v_bound = min(dense_vocab_limit,
-                  brute_cells_limit // max(len(texts_pdf), 1))
-    vocab_seen: set = set()
-    ids_l, sets_l = [], []
-    for doc_id, text in zip(texts_pdf[id_col], texts_pdf[text_col]):
-        toks = text.split(" ") if isinstance(text, str) else []
-        s = {toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)}
-        vocab_seen.update(s)
-        if len(vocab_seen) > v_bound:
-            return None
-        if len(s) >= min_shingles:
-            ids_l.append(doc_id)
-            sets_l.append(list(s))
-    if not ids_l:
-        return _finish(spark.createDataFrame([], out_schema))
-    lens = np.array([len(s) for s in sets_l], dtype=np.int64)
-    all_vals = np.concatenate([np.asarray(s, dtype=object)
-                               for s in sets_l])
-    # factorize = hash-based shingle→column bijection at C speed; the
-    # column order is internal, any bijection yields identical counts
-    codes, uniq = pd.factorize(all_vals)
-    vocab_n, n_docs = len(uniq), len(ids_l)
-    if (vocab_n > dense_vocab_limit
-            or n_docs * max(vocab_n, 1) > brute_cells_limit):
-        return None
-    bits = np.zeros((n_docs, vocab_n), dtype=np.float32)
-    bits[np.repeat(np.arange(n_docs), lens), codes] = 1.0
-    ids_all = np.asarray(ids_l)
-    bc = spark.sparkContext.broadcast((ids_all, lens, bits))
-    # A side: a position frame only — every doc is an A row exactly once,
-    # so each ordered pair is emitted exactly once and equal sets emit
-    # both directions; self-pairs are excluded by position (O(rows)).
-    a_side = (spark.createDataFrame(
-        pd.DataFrame({"_ix": np.arange(n_docs, dtype=np.int64)}),
-        schema=T.StructType([T.StructField("_ix", T.LongType())]))
-        .repartition(_par(docs)))
-
-    def verify(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids_b, na_b, bits_b = bc.value
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ixs = b["_ix"].to_numpy()
-            inter = (bits_b[ixs] @ bits_b.T).astype(np.int64)
-            na_a = na_b[ixs]
-            ok = den * inter >= num * na_a[:, None]
-            # Degenerate-input parity with the candidate routes (ADVICE
-            # r16): an empty shingle set (possible only when the caller
-            # passes min_shingles < 1) must pair with nothing — the
-            # accept is vacuously true at na = 0 — and the join routes
-            # exclude contained != container by ID, so duplicate doc
-            # ids may not emit (X, X) self-pairs either (positional
-            # self-exclusion alone misses them).
-            ok &= na_a[:, None] > 0
-            ok[np.arange(len(ixs)), ixs] = False
-            ai, bi = np.nonzero(ok)
-            if len(ai):
-                keep = ids_b[ixs[ai]] != ids_b[bi]
-                ai, bi = ai[keep], bi[keep]
-            yield pd.DataFrame({
-                "contained": ids_b[ixs[ai]],
-                "container": ids_b[bi],
-                "n_contained": na_a[ai].astype(np.int32),
-                "inter": inter[ai, bi].astype(np.int32),
-            })
-
-    return _finish(a_side.mapInPandas(verify, out_schema))
-
-
 def ngram_containment_pairs(docs: DataFrame, id_col: str, text_col: str,
                             threshold_num: int = 9, threshold_den: int = 10,
                             min_shingles: int = 5,
                             hashed_verify: bool = True,
-                            max_doc_freq: int | None = None,
-                            dense_vocab_limit: int = 8192,
-                            brute_cells_limit: int = 16_000_000) -> DataFrame:
+                            max_doc_freq: int | None = None) -> DataFrame:
     """ASYMMETRIC near-duplicate detection: pairs where one document's
     shingle set is ≥ num/den contained in another's — Broder's
     *containment* c(A,B) = |A∩B| / |A|. Catches what symmetric Jaccard
@@ -1128,47 +1025,72 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str, text_col: str,
     ultra-frequent may be missed — the documented stop-shingle
     sub-recall trade, mirroring ``ngram_jaccard_prefix_pairs``.
 
-    ``brute_cells_limit`` (r16 opt; 0 disables): when the corpus is small
-    (raw texts under ``_BRUTE_COLLECT_BYTES``) and dense (n_docs × vocab
-    ≤ this many bit-matrix cells — a 64 MB float32 matrix at the 16M
-    default), candidates are skipped entirely: texts are collected once
+    Brute route (a driver route): when the corpus is small (ids
+    + texts under ``_BRUTE_COLLECT_BYTES``) and dense (n_docs × vocab ≤
+    ``_BRUTE_MAX_CELLS`` bit-matrix cells — a 64 MB float32 matrix),
+    candidates are skipped entirely: texts are collected once
     (bounded), shingled in Python, and all ordered pairs are verified by
     one float32 GEMM per task over the broadcast bit matrix
-    (``_containment_brute_gemm``; exact — inter ≤ vocab ≤ 8192 « 2^24).
+    (``_brute_gemm``; exact — inter ≤ vocab ≤ 8192 « 2^24).
     Past either gate the candidate-join routes below serve unchanged, so
     a 100 TB corpus never collects anything. Route-equality
     pytest-pinned across all three routes."""
     from pyspark.sql import Window
 
-    # Brute GEMM route probe (r16 opt): on a small dense corpus the
-    # prefix filter cannot block (sf0.1: 3.99M of 12.5M pairs remain
-    # candidates) and the candidate join + mask joins dominate — 10.4 s
-    # calm vs DuckDB's sub-second hash agg. One NARROW aggregate decides
-    # whether the raw texts are small enough to collect (no explode, no
-    # distinct shuffle, no tokenize — the Spark-side shingle expression
-    # alone measured ~2 s calm, interpreted HOFs); the density gates
-    # (vocab ≤ dense_vocab_limit, docs·vocab ≤ brute_cells_limit) are
-    # then checked driver-side after the bounded collect, falling back to
-    # the candidate-join routes when the corpus turns out sparse. Past
-    # the byte gate nothing is ever collected — a 100 TB corpus goes
-    # straight to the join routes.
-    # max_doc_freq is a deliberate sub-recall cap — the caller asked for
-    # the capped candidate semantics, which the exact brute route cannot
-    # honor, so it only serves the exact (default) form.
-    if brute_cells_limit and max_doc_freq is None:
-        _q = docs.agg(
-            F.count(F.lit(1)).alias("d"),
-            F.sum(F.length(F.col(text_col))).alias("b")).first()
-        q_docs, q_bytes = int(_q["d"] or 0), int(_q["b"] or 0)
-        if (q_docs * min_shingles <= brute_cells_limit
-                and q_bytes <= _BRUTE_COLLECT_BYTES):
-            texts_pdf = docs.select(id_col, text_col).toPandas()
-            out = _containment_brute_gemm(
-                docs, id_col, text_col, texts_pdf, min_shingles,
-                threshold_num, threshold_den, dense_vocab_limit,
-                brute_cells_limit)
-            if out is not None:
-                return out
+    # Brute GEMM route: on a small dense corpus the prefix
+    # filter cannot block (sf0.1: 3.99M of 12.5M pairs remain candidates)
+    # and the candidate join + mask joins dominate — 10.4 s calm vs
+    # DuckDB's sub-second hash agg. One NARROW aggregate decides whether
+    # the raw texts are small enough to collect (no explode, no distinct
+    # shuffle, no tokenize); the density gates are then checked
+    # driver-side after the bounded collect, falling back to the
+    # candidate-join routes when the corpus turns out sparse. The row
+    # bound keeps docs × min_shingles within the cell bound. max_doc_freq
+    # is a deliberate sub-recall cap — the caller asked for the capped
+    # candidate semantics, which the exact brute route cannot honor, so
+    # it only serves the exact (default) form.
+    num, den = threshold_num, threshold_den
+    texts_pdf = None if max_doc_freq is not None else _brute_texts(
+        docs, id_col, text_col, _BRUTE_MAX_CELLS // max(min_shingles, 1))
+    if texts_pdf is not None:
+        def accept(ixs, inter, ids, lens):
+            import numpy as np
+            import pandas as pd
+
+            na_a = lens[ixs]
+            ok = den * inter >= num * na_a[:, None]
+            # Degenerate-input parity with the candidate routes: an
+            # empty shingle set (possible only when the caller
+            # passes min_shingles < 1) must pair with nothing — the
+            # accept is vacuously true at na = 0 — and the join routes
+            # exclude contained != container by ID, so duplicate doc ids
+            # may not emit (X, X) self-pairs either (positional
+            # self-exclusion alone misses them). Equal sets emit both
+            # directions.
+            ok &= na_a[:, None] > 0
+            ok[np.arange(len(ixs)), ixs] = False
+            ai, bi = np.nonzero(ok)
+            keep = ids[ixs[ai]] != ids[bi]
+            ai, bi = ai[keep], bi[keep]
+            return pd.DataFrame({
+                "contained": ids[ixs[ai]],
+                "container": ids[bi],
+                "n_contained": na_a[ai].astype(np.int32),
+                "inter": inter[ai, bi].astype(np.int32),
+            })
+
+        id_t = docs.schema[id_col].dataType
+        out = _brute_gemm(
+            docs, id_col, text_col, texts_pdf, hashed_verify, min_shingles,
+            T.StructType([T.StructField("contained", id_t),
+                          T.StructField("container", id_t),
+                          T.StructField("n_contained", T.IntegerType()),
+                          T.StructField("inter", T.IntegerType())]),
+            accept)
+        if out is not None:
+            return out.withColumn(
+                "containment", F.col("inter").cast("double")
+                / F.col("n_contained").cast("double"))
 
     arr = shingle_arrays(docs, id_col, text_col)
     if hashed_verify:
@@ -1231,7 +1153,7 @@ def ngram_containment_pairs(docs: DataFrame, id_col: str, text_col: str,
     # corpus (vocab ~ corpus size) stays on the array path where masks
     # are impossible and candidates are few anyway.
     vocab_n = freq.count()
-    if vocab_n <= dense_vocab_limit:
+    if vocab_n <= _DENSE_VOCAB_MAX:
         nw = (vocab_n + 63) // 64
         vocab_idx = freq.select(
             "shingle",

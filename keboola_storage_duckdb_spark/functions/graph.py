@@ -27,6 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import bounded_collect
+
+# Driver union-find bound: ~60 MB of id pairs at the row bound; the byte
+# bound covers long string ids (ids + ~120 B/row of Python overhead).
+_CC_DRIVER_MAX_ROWS = 1_000_000
+_CC_DRIVER_MAX_BYTES = 256 << 20
+
 
 def _cc_driver(edges: DataFrame, a: str, b: str, rows: list) -> DataFrame:
     """Driver union-find for SMALL edge lists (caller has proven the
@@ -75,13 +82,12 @@ def _cc_driver(edges: DataFrame, a: str, b: str, rows: list) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, a: str = "id_a", b: str = "id_b",
-                         max_iter: int = 25, jump_from: int = 0,
-                         driver_limit: int = 1_000_000,
-                         driver_byte_limit: int = 256 << 20) -> DataFrame:
+                         max_iter: int = 25, jump_from: int = 0) -> DataFrame:
     """(id, cluster) for every vertex appearing in ``edges``; ``cluster`` is
     the minimum vertex id of the component. Deterministic.
 
-    Edge lists under ``driver_limit`` rows run as a driver union-find: a
+    Edge lists under ``_CC_DRIVER_MAX_ROWS`` rows run as a driver
+    union-find (a :func:`~.util.bounded_collect` driver route): a
     500-edge dedup graph costs milliseconds there vs one full Spark job
     per label round (r15; this, not the round count, was the
     minhash_dedup_keep floor), and even the 10× fixtures' 250k-1M-edge
@@ -116,35 +122,22 @@ def connected_components(edges: DataFrame, a: str = "id_a", b: str = "id_b",
     # them ONCE here so both paths agree (an edge with a null endpoint
     # identifies nothing and is meaningless for clustering).
     edges = edges.filter(F.col(a).isNotNull() & F.col(b).isNotNull())
-    if driver_limit:
-        # Probe via a lazily-checkpointed aggregate, NEVER
-        # limit().collect(): a CollectLimit over the (expensive) pair
-        # pipeline funnels the whole upstream through one task — measured
-        # 116 s vs 9 s at 10× on the 2.4M-edge minhash graph. The agg
-        # materializes the cache in parallel; the small case collects
-        # FROM the cache and the large case feeds the loop from it — the
-        # pipeline runs once either way. The bound is sized on BYTES,
-        # not rows: long string ids at 1M rows can cost several hundred
-        # MB of Row objects on the driver, so the same probe measures
-        # the average id width and the collect only happens when the
-        # estimated footprint (ids + ~120 B/Row Python overhead) fits
-        # in ``driver_byte_limit``.
-        edges = edges.select(a, b).localCheckpoint(eager=False)
-        probe = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.length(F.col(a).cast("string"))).alias("wa"),
-            F.avg(F.length(F.col(b).cast("string"))).alias("wb"),
-        ).collect()[0]
-        n = probe["n"]
-        est_bytes = n * ((probe["wa"] or 0) + (probe["wb"] or 0) + 120)
-        if n <= driver_limit and est_bytes <= driver_byte_limit:
-            # Arrow transfer (toPandas), not collect(): no per-Row
-            # wrapper objects — the r16 ceiling probe measured ~570 MB
-            # RSS and 16 s for a 1M-edge collect+createDataFrame round
-            # trip via pickle; Arrow cuts both by an order of magnitude.
-            pdf = edges.toPandas()
-            return _cc_driver(edges, a, b,
-                              list(zip(pdf[a], pdf[b])))
+    # Probe via a lazily-checkpointed aggregate, NEVER
+    # limit().collect(): a CollectLimit over the (expensive) pair
+    # pipeline funnels the whole upstream through one task — measured
+    # 116 s vs 9 s at 10× on the 2.4M-edge minhash graph. The probe
+    # materializes the cache in parallel; the small case collects FROM
+    # the cache and the large case feeds the loop from it — the pipeline
+    # runs once either way. The bound is sized on BYTES too: long string
+    # ids at 1M rows can cost several hundred MB on the driver.
+    edges = edges.select(a, b).localCheckpoint(eager=False)
+    tbl = bounded_collect(
+        edges, _CC_DRIVER_MAX_ROWS, _CC_DRIVER_MAX_BYTES,
+        row_bytes=(F.length(F.col(a).cast("string"))
+                   + F.length(F.col(b).cast("string")) + F.lit(120)))
+    if tbl is not None:
+        pdf = tbl.to_pandas()
+        return _cc_driver(edges, a, b, list(zip(pdf[a], pdf[b])))
     und = (edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
                 .unionByName(
                edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))

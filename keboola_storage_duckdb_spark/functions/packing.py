@@ -32,19 +32,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import BPE_REGEX
+from .util import bounded_collect
 
 __all__ = ["pack_token_stream", "corpus_shards", "epoch_plan",
            "padding_waste", "bfd_pack"]
 
 
-# Driver-scan crossover bound (r17 opt; the quota/Lloyd/union-find
-# discipline): when a scan's input is KNOWN to be at most this many rows
-# (from a caller-supplied bound or a metadata-cheap count(*) — never a
-# probe that re-runs the tokenize), the whole exclusive scan runs on one
-# bounded toPandas + int64 cumsum instead of the range shuffle +
-# checkpoint + totals collect + window join. ~150 B/row → ~150 MB at the
-# default. Past the bound (or on null/tied/exotic order keys) the
-# two-phase distributed scan serves unchanged.
+# Driver-scan crossover bound (a bounded_collect driver route):
+# when a scan's input holds at most this many rows — by a true count, or
+# a metadata-cheap count(*) of the frame the scan input only filters —
+# the whole exclusive scan runs on one bounded collect + int64 cumsum
+# instead of the range shuffle + checkpoint + totals collect + window
+# join. ~150 B/row → ~150 MB at the bound. Past it (or on
+# null/tied/exotic order keys) the two-phase distributed scan serves.
 _DRIVER_SCAN_MAX_ROWS = 1_000_000
 
 _SCAN_KEY_TYPES = ("bigint", "int", "smallint", "tinyint", "string")
@@ -52,27 +52,27 @@ _SCAN_KEY_TYPES = ("bigint", "int", "smallint", "tinyint", "string")
 
 def _exclusive_scan_driver(rows: DataFrame, order_col: str,
                            group_cols: list[str], weight_col: str,
-                           out_col: str) -> DataFrame | None:
+                           out_col: str, count=None) -> DataFrame | None:
     """Bounded driver route for :func:`_exclusive_scan` (r17 opt): one
-    toPandas of the (already caller-bounded) rows frame, a mergesort by
-    the order key and a per-group int64 exclusive cumsum — integer
-    arithmetic only, so the sums are exact in any order and the result
-    is bit-identical to the distributed two-phase scan. Returns None
-    when the gates refuse (exotic/null/tied order keys — ordering among
-    ties is undefined in BOTH forms, so ties route to the distributed
-    scan exactly as certified data never exercises them).
+    bounded collect of the rows frame, a mergesort by the order key and
+    a per-group int64 exclusive cumsum — integer arithmetic only, so the
+    sums are exact in any order and the result is bit-identical to the
+    distributed two-phase scan. Returns None when the bound or the gates
+    refuse (exotic/null/tied order keys — ordering among ties is
+    undefined in BOTH forms, so ties route to the distributed scan
+    exactly as certified data never exercises them).
 
     Python str ordering == Spark UTF8 binary ordering (UTF-8 byte order
     preserves code-point order), so string keys sort identically."""
-    import pandas as pd  # noqa: F401  (toPandas dependency, explicit)
-
-    spark = rows.sparkSession
     types = dict(rows.dtypes)
     if types.get(order_col) not in _SCAN_KEY_TYPES:
         return None
     if any(types.get(g) not in _SCAN_KEY_TYPES for g in group_cols):
         return None
-    pdf = rows.toPandas()
+    tbl = bounded_collect(rows, _DRIVER_SCAN_MAX_ROWS, rows=count)
+    if tbl is None:
+        return None
+    pdf = tbl.to_pandas()
     if len(pdf) and (pdf[order_col].isna().any()
                      or pdf[order_col].duplicated().any()
                      or any(pdf[g].isna().any() for g in group_cols)):
@@ -88,15 +88,13 @@ def _exclusive_scan_driver(rows: DataFrame, order_col: str,
     from pyspark.sql import types as T
     schema = T.StructType(list(rows.schema.fields)
                           + [T.StructField(out_col, T.LongType(), True)])
-    return spark.createDataFrame(pdf, schema)
+    return rows.sparkSession.createDataFrame(pdf, schema)
 
 
 def _exclusive_scan(rows: DataFrame, order_col: str,
                     group_cols: list[str], weight_col: str,
                     off_schema: str, partitions: int,
-                    out_col: str, max_rows: int | None = None,
-                    driver_row_limit: int = _DRIVER_SCAN_MAX_ROWS
-                    ) -> DataFrame:
+                    out_col: str, count=None) -> DataFrame:
     """Shared two-phase exclusive prefix scan: ``out_col`` = the sum of
     ``weight_col`` over all rows strictly before this one in
     ``order_col`` order within its ``group_cols`` group (global when
@@ -110,21 +108,18 @@ def _exclusive_scan(rows: DataFrame, order_col: str,
        scalars — AQE-class metadata, never row data);
     3. broadcast offsets back + an intra-partition running window.
 
-    ``max_rows`` (r17 opt): a caller-known UPPER BOUND on the row count
-    (a quota budget, or a metadata count(*) of the raw input — callers
-    never pay a probe that re-runs their expensive map). When it fits
-    ``driver_row_limit`` the scan runs on one bounded driver collect
-    instead (:func:`_exclusive_scan_driver`); integer cumsums are exact
-    in any order, so the route cannot change a result (pytest-pinned
-    bit-equal). None or past the bound → the distributed form above.
-    ``driver_row_limit=0`` disables the driver route entirely."""
+    Small inputs take the bounded driver route instead
+    (:func:`_exclusive_scan_driver`); integer cumsums are exact in any
+    order, so the route cannot change a result (pytest-pinned
+    bit-equal). ``count`` is the ``rows`` argument of
+    :func:`~.util.bounded_collect`: a count of the raw input the scan
+    input only filters, so callers never pay a probe that re-runs their
+    expensive map; None probes ``rows`` itself."""
     spark = rows.sparkSession
-    if (driver_row_limit and max_rows is not None
-            and 0 <= max_rows <= driver_row_limit):
-        out = _exclusive_scan_driver(rows, order_col, group_cols,
-                                     weight_col, out_col)
-        if out is not None:
-            return out
+    out = _exclusive_scan_driver(rows, order_col, group_cols, weight_col,
+                                 out_col, count)
+    if out is not None:
+        return out
     ranged = (rows.repartitionByRange(partitions, order_col)
                   .withColumn("pid", F.spark_partition_id())
                   .localCheckpoint(eager=False))   # pin pid assignment
@@ -153,8 +148,7 @@ def _exclusive_scan(rows: DataFrame, order_col: str,
 def pack_token_stream(docs: DataFrame, id_col: str, text_col: str,
                       max_len: int = 2048,
                       partitions: int | None = None,
-                      token_counts: DataFrame | None = None,
-                      driver_row_limit: int = _DRIVER_SCAN_MAX_ROWS
+                      token_counts: DataFrame | None = None
                       ) -> DataFrame:
     """Map each document to its span in the packed global token stream.
 
@@ -168,20 +162,17 @@ def pack_token_stream(docs: DataFrame, id_col: str, text_col: str,
     tokenizer — replaces the regex-piece proxy so packed spans budget
     real tokens.
 
-    ``driver_row_limit`` (r17 opt, 0 disables): under it the exclusive
-    scan runs on one bounded driver collect (see ``_exclusive_scan``);
-    the row bound comes from a column-less count(*) of the RAW input —
-    never a probe that re-runs the tokenize.
+    Under ``_DRIVER_SCAN_MAX_ROWS`` the exclusive scan runs on one
+    bounded driver collect (see ``_exclusive_scan``); the row count
+    comes from a column-less count(*) of the RAW input — never a probe
+    that re-runs the tokenize.
     """
     spark = docs.sparkSession
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
-    max_rows = None
-    if driver_row_limit:
-        # pruned-to-nothing scan (count never evaluates the token map);
-        # counts pre-filter rows, a valid UPPER bound on the scan input
-        max_rows = (token_counts if token_counts is not None
-                    else docs).count()
+    # pruned-to-nothing scan (count never evaluates the token map); it
+    # counts pre-filter rows, a valid UPPER bound on the scan input
+    count = (token_counts if token_counts is not None else docs).count
     if token_counts is not None:
         idc, cntc = token_counts.columns[:2]
         toks = (token_counts.select(
@@ -199,8 +190,7 @@ def pack_token_stream(docs: DataFrame, id_col: str, text_col: str,
 
     out = _exclusive_scan(toks, "doc_id", [], "n_tokens",
                           "pid int, off long", partitions, "start_token",
-                          max_rows=max_rows,
-                          driver_row_limit=driver_row_limit) \
+                          count=count) \
         .select("doc_id", "n_tokens", "start_token",
                 F.expr(f"start_token DIV {max_len}").alias("first_chunk"),
                 F.expr(f"(start_token + n_tokens - 1) DIV {max_len}")
@@ -212,8 +202,7 @@ def pack_token_stream(docs: DataFrame, id_col: str, text_col: str,
 def epoch_plan(docs: DataFrame, group_col: str, id_col: str,
                text_col: str, budget: int = 200, n_shards: int = 4,
                max_len: int = 2048, seed: str = "epoch",
-               partitions: int | None = None,
-               driver_row_limit: int = _DRIVER_SCAN_MAX_ROWS) -> DataFrame:
+               partitions: int | None = None) -> DataFrame:
     """One training EPOCH, end to end (VERDICT r10 #5): compose the
     three certified mixture/layout primitives into the frame a data
     loader actually consumes —
@@ -264,13 +253,13 @@ def epoch_plan(docs: DataFrame, group_col: str, id_col: str,
                             (F.conv(F.substring("h", 1, 12), 16, 10)
                               .cast("long") % n_shards).cast("int"))
                 .filter(F.col("n_tokens") > 0))
-    # The scan input is quota-bounded BY CONSTRUCTION: the mixture keeps
-    # Σ_g ⌊budget·√n_g/Σ√n⌋ ≤ budget rows, so the driver-scan bound is a
-    # parameter, not a probe — no extra job on any scale path (r17 opt).
+    # The mixture keeps ≤ budget ids, but ``budget`` is NOT a row bound
+    # of the scan input: duplicate doc ids multiply the joined rows. The
+    # driver scan is gated on a true count of ``kept`` (``rows`` only
+    # maps and filters it; the count prunes to the id join, no tokenize).
     out = _exclusive_scan(rows, "h", ["shard"], "n_tokens",
                           "pid int, shard int, off long", partitions,
-                          "start_token", max_rows=budget,
-                          driver_row_limit=driver_row_limit)
+                          "start_token", count=kept.count)
     return (out.select(
                 "doc_id", "g", "shard", "n_tokens", "start_token",
                 F.expr(f"start_token DIV {max_len}").alias("first_chunk"),
@@ -283,9 +272,7 @@ def epoch_plan(docs: DataFrame, group_col: str, id_col: str,
 
 def corpus_shards(docs: DataFrame, id_col: str, n_shards: int = 8,
                   seed: str = "shard",
-                  partitions: int | None = None,
-                  driver_row_limit: int = _DRIVER_SCAN_MAX_ROWS
-                  ) -> DataFrame:
+                  partitions: int | None = None) -> DataFrame:
     """Deterministic global shuffle + shard layout for a training run:
     every row gets a reproducible pseudo-random order key
     ``md5(seed|id)``, a uniform shard ``first-48-bits(key) % n_shards``,
@@ -315,11 +302,9 @@ def corpus_shards(docs: DataFrame, id_col: str, n_shards: int = 8,
     rows = rows.withColumn("one", F.lit(1).cast("long"))
     # column-less count(*) of the raw input = the scan-input upper bound
     # (rows only FILTERS docs); no tokenize/hash evaluates under count
-    max_rows = docs.count() if driver_row_limit else None
     return _exclusive_scan(rows, "h", ["shard"], "one",
                            "pid int, shard int, off long", partitions,
-                           "pos", max_rows=max_rows,
-                           driver_row_limit=driver_row_limit) \
+                           "pos", count=docs.count) \
         .select("doc_id", "shard", "pos")
 
 

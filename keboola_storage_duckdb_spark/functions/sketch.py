@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .util import bounded_collect
+
 __all__ = ["hll_register_table", "hll_estimate",
            "cm_sketch_table", "cm_estimate", "bottom_k_sample",
            "weighted_sample", "quota_sample", "token_quota_sample",
@@ -302,10 +304,13 @@ SELECT g AS "group", draw, sel_id AS id, sel_w AS weight
 FROM sel WHERE is_row = 0"""
 
 
+# quota_sample's driver-route bound: rows of the quota'd groups.
+_QUOTA_DRIVER_MAX_ROWS = 262_144
+
+
 def quota_sample(df: DataFrame, group_col: str, id_col: str,
                  quotas: dict[str, int],
                  prefilter: bool = True,
-                 driver_row_limit: int = 262_144,
                  sizes: dict[str, int] | None = None) -> DataFrame:
     """Per-group QUOTA sampling without replacement — the training-
     mixture primitive stated as counts: "this mixture takes 40 docs of
@@ -375,21 +380,26 @@ def quota_sample(df: DataFrame, group_col: str, id_col: str,
         # restrict to quota'd groups — the probe above only ever counts
         # rows that survive the join to q
         sizes = {g: int(n) for g, n in sizes.items() if g in qmap}
-    # Driver route (r16 opt, the Lloyd/quantile crossover discipline):
-    # the sizes probe above already tells us how many rows the quota'd
-    # groups hold; under the bound collect (g, id, h) once and rank in
-    # Python — the md5 strings come FROM the scan, the per-group sort is
-    # the identical ascending hex order, ranks and the quota filter are
-    # integer-exact, so the output is bit-identical to either
-    # distributed form (pytest-pinned). Replaces the survivor-count
-    # guard job + the rank window + its join with one bounded collect.
-    if driver_row_limit and 0 < sum(sizes.values()) <= driver_row_limit:
+    # Driver route (a bounded_collect driver route): the sizes
+    # above are the true row count of the quota'd groups; under the
+    # bound collect (g, id, h) once and rank in Python — the md5 strings
+    # come FROM the scan, the per-group sort is the identical ascending
+    # hex order, ranks and the quota filter are integer-exact, so the
+    # output is bit-identical to either distributed form (pytest-pinned).
+    # Replaces the survivor-count guard job + the rank window + its join
+    # with one bounded collect.
+    total = sum(sizes.values())
+    tbl = None
+    if total > 0:
+        tbl = bounded_collect(
+            base.join(F.broadcast(q), "g").select("g", "id", "h", "quota"),
+            _QUOTA_DRIVER_MAX_ROWS, rows=total)
+    if tbl is not None:
         import pandas as pd
 
         from pyspark.sql import types as _T
 
-        pdf = (base.join(F.broadcast(q), "g")
-                   .select("g", "id", "h", "quota").toPandas())
+        pdf = tbl.to_pandas()
         parts = []
         for g, grp in pdf.groupby("g", sort=False):
             # max(0): pandas head(-n) would DROP tail rows, while the

@@ -263,11 +263,6 @@ FROM {table}
 """
 
 
-def lexicon_df(spark):
-    rows = [(lang, w) for lang, ws in STOPWORDS.items() for w in ws]
-    return spark.createDataFrame(rows, ["lex_lang", "word"])
-
-
 def language_id(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Stopword-profile language ID, fully per-row: per language,
     hits = occurrence count of that language's stopwords in the lowercased

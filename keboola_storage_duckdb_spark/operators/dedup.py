@@ -32,11 +32,6 @@ class DuplicateKeyError(Exception):
     """Raised by fail_on_duplicates (maps to the reference's HTTP 409)."""
 
 
-def _non_pk_cols(df: DataFrame, pk: list[str]) -> list[str]:
-    pkset = {c.lower() for c in pk}
-    return [c for c in df.columns if c.lower() not in pkset]
-
-
 def dedup_staging_last_wins(staging: DataFrame, pk: list[str],
                             order_col: str | None = None) -> DataFrame:
     """Collapse duplicate PKs inside a staged batch, keeping the last row.

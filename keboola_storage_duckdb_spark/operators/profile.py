@@ -22,7 +22,6 @@ g1/g2 — hence the formula-level reimplementation.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -90,52 +89,6 @@ def string_columns(df: DataFrame) -> list[str]:
 # ---------------------------------------------------------------------------
 # Exact-decimal moment machinery
 # ---------------------------------------------------------------------------
-
-@dataclass
-class DecimalSpec:
-    """Decimal cast spec for a numeric column so that power sums up to
-    ``max_power`` stay within DECIMAL(38) under BOTH Spark's and DuckDB's
-    multiplication precision rules (p1+p2+1 capped at 38)."""
-    precision: int
-    scale: int
-    max_power: int = 4
-
-    @property
-    def ddl(self) -> str:
-        return f"DECIMAL({self.precision},{self.scale})"
-
-
-def decimal_spec_for(df_or_stats, col: str, max_abs: float, scale: int = 2) -> DecimalSpec:
-    """Pick the narrowest decimal that holds |x| ≤ max_abs with ``scale``
-    fractional digits, and determine how many exact power sums fit."""
-    int_digits = max(1, int(math.floor(math.log10(max(max_abs, 1)))) + 1)
-    p = int_digits + scale
-    # power k needs roughly k*p + (k-1) digits for the product type, +10 for sum
-    max_power = 1
-    for k in (2, 3, 4):
-        prod_p = k * p + (k - 1)
-        if prod_p <= 38:
-            max_power = k
-    return DecimalSpec(precision=p, scale=scale, max_power=max_power)
-
-
-def power_sum_exprs(col: str, spec: DecimalSpec, alias_prefix: str) -> list[Column]:
-    """Exact power sums S1..S4 (as far as the decimal budget allows) plus
-    count of non-nulls. Products are built by repeated binary multiplication
-    so Spark and DuckDB assign identical result types (p1+p2+1, s1+s2)."""
-    d = F.col(col).cast(spec.ddl)
-    exprs = [
-        F.count(F.col(col)).alias(f"{alias_prefix}_n"),
-        F.sum(d).cast("double").alias(f"{alias_prefix}_s1"),
-    ]
-    if spec.max_power >= 2:
-        exprs.append(F.sum(d * d).cast("double").alias(f"{alias_prefix}_s2"))
-    if spec.max_power >= 3:
-        exprs.append(F.sum(d * d * d).cast("double").alias(f"{alias_prefix}_s3"))
-    if spec.max_power >= 4:
-        exprs.append(F.sum((d * d) * (d * d)).cast("double").alias(f"{alias_prefix}_s4"))
-    return exprs
-
 
 def moments_from_power_sums(n: float, s1: float, s2: float | None,
                             s3: float | None, s4: float | None) -> dict:
@@ -205,18 +158,6 @@ def quality_score(high_null_cols: int, outlier_cols: int) -> int:
 # ---------------------------------------------------------------------------
 # Full-table profile (engine API)
 # ---------------------------------------------------------------------------
-
-@dataclass
-class ColumnProfile:
-    name: str
-    dtype: str
-    count: int = 0
-    null_count: int = 0
-    distinct_count: int = 0
-    stats: dict = field(default_factory=dict)
-    patterns: list[str] = field(default_factory=list)
-    cardinality: str = ""
-
 
 def approx_distinct_counts(df: DataFrame, cols: list[str],
                            b_bits: int = 12) -> dict[str, int]:

@@ -57,6 +57,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.util import bounded_collect
+
 __all__ = ["exact_quantile_order_stats", "exact_quantiles",
            "exact_quantiles_auto", "exact_quantiles_grouped",
            "exact_quantiles_grouped_frame", "grouped_quantiles_auto",
@@ -855,10 +857,15 @@ def exact_quantiles(df: DataFrame, cols: list[str], probs: list[float],
     return out
 
 
-def _exact_quantiles_driver(df: DataFrame, cols: list[str],
+# Driver-collect quantile bound: rows × columns values — ~64 MB
+# of float64 at the bound.
+_DRIVER_QUANTILE_MAX_VALUES = 8_000_000
+
+
+def _exact_quantiles_driver(tbl, cols: list[str],
                             probs: list[float]) -> dict[str, list[float]]:
     """Driver-collect quantile route (r16 opt, the Lloyd-crossover
-    discipline): one bounded toPandas of the needed columns, np.sort per
+    discipline): the bounded collect of the needed columns, np.sort per
     column, the SAME order statistics and the module's own ``_interp``
     formula — order statistics are data values, so selection method
     cannot change them, and the interpolation op order is shared with
@@ -867,11 +874,9 @@ def _exact_quantiles_driver(df: DataFrame, cols: list[str],
     including NaN."""
     import numpy as np
 
-    # toArrow keeps the null bitmap separate from NaN VALUES (toPandas
-    # would conflate both into float64 NaN): drop_null removes exactly
-    # the SQL NULLs, genuine NaNs stay and sort above every double.
-    tbl = df.select(*[F.col(c).cast("double").alias(c)
-                      for c in cols]).toArrow()
+    # The Arrow table keeps the null bitmap separate from NaN VALUES
+    # (toPandas would conflate both into float64 NaN): drop_null removes
+    # exactly the SQL NULLs, genuine NaNs stay and sort above every double.
     out: dict[str, list[float]] = {}
     for c in cols:
         vals = np.sort(tbl.column(c).drop_null().to_numpy(
@@ -894,7 +899,6 @@ def exact_quantiles_auto(df: DataFrame, cols: list[str], probs: list[float],
                          bins: int = 4096, max_inbin: int = 4_000_000,
                          max_rows: int = 200_000,
                          precomputed_stats: dict | None = None,
-                         driver_value_limit: int = 8_000_000,
                          ) -> dict[str, list[float]]:
     """SIZE-GUARDED ungrouped exact quantiles (VERDICT r8 #5 — the
     ungrouped twin of :func:`grouped_quantiles_auto`): one cheap count
@@ -936,20 +940,22 @@ def exact_quantiles_auto(df: DataFrame, cols: list[str], probs: list[float],
         n = max(precomputed_stats[c][0] for c in cols)
     else:
         n = df.count()
-    # Driver-collect route (r16 opt): under the value bound (~64 MB of
-    # float64 at the default) ONE bounded toArrow + np.sort replaces
-    # either multi-job engine — order statistics are data values, so the
-    # route can never change a result (pytest pins all three routes
-    # bit-equal). 0 disables; past the bound the original crossover
-    # logic picks native vs histogram exactly as before.
-    # Stats-supplied calls NEVER take it (VERDICT r16 #1): stats carry
-    # only the max per-column NON-NULL count, but toArrow collects ALL
-    # rows — a mostly-NULL column on a huge table would pass the value
-    # bound yet collect everything. Only a true row count may gate a
-    # driver collect.
-    if (precomputed_stats is None and driver_value_limit
-            and 0 < n * len(cols) <= driver_value_limit):
-        return _exact_quantiles_driver(df, cols, probs)
+    # Driver-collect route: under the value bound ONE bounded
+    # collect + np.sort replaces either multi-job engine — order
+    # statistics are data values, so the route can never change a result
+    # (pytest pins all three routes bit-equal). Past the bound the
+    # original crossover logic picks native vs histogram exactly as
+    # before. Stats-supplied calls NEVER take it: stats
+    # carry only the max per-column NON-NULL count, but the collect takes
+    # ALL rows — a mostly-NULL column on a huge table would pass the
+    # value bound yet collect everything. Only a true row count may gate
+    # a driver collect.
+    if precomputed_stats is None and n > 0:
+        tbl = bounded_collect(
+            df.select(*[F.col(c).cast("double").alias(c) for c in cols]),
+            _DRIVER_QUANTILE_MAX_VALUES // len(cols), rows=n)
+        if tbl is not None:
+            return _exact_quantiles_driver(tbl, cols, probs)
     if n > max_rows:
         return exact_quantiles(df, cols, probs, bins, max_inbin,
                                precomputed_stats)

@@ -60,11 +60,3 @@ def s3_credentials_conf(access_key: str | None = None,
         conf[prefix + "endpoint"] = endpoint
         conf[prefix + "path.style.access"] = "true"  # MinIO-style endpoints
     return conf
-
-
-def azure_credentials_conf(account: str, access_key: str) -> dict[str, str]:
-    """Azure storage-account key → hadoop-azure ABFS conf."""
-    return {
-        f"spark.hadoop.fs.azure.account.key.{account}.dfs.core.windows.net":
-            access_key,
-    }

@@ -169,28 +169,6 @@ def test_packing_consumes_trained_token_counts(spark):
     assert default[3].first_chunk == 1        # 2 docs per chunk there
 
 
-def test_bpe_train_driver_equals_distributed(spark, sf_dir):
-    """The driver-local training crossover (VERDICT r15 #1) must be
-    bit-equal to the per-round distributed loop: same merges (order,
-    symbols, exact pair counts) and same fully-merged vocabulary, on a
-    real corpus AND on a tie-heavy crafted one (md5 tie-breaks fire)."""
-    real = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-                .select("doc_id", "text")
-    ties = spark.createDataFrame(
-        [(1, "aa bb cc dd ee aa"), (2, "ff gg hh aa ii jj"),
-         (3, "xyz xyz qrs añé añé")], "doc_id long, text string")
-    for docs, rounds in ((real, 6), (ties, 5)):
-        m_drv, v_drv = bpe_train(docs, "text", rounds=rounds)
-        m_dst, v_dst = bpe_train(docs, "text", rounds=rounds,
-                                 driver_limit=0)
-        assert m_drv == m_dst
-        s_drv = sorted((r.word, r.freq, tuple(r.seq))
-                       for r in v_drv.collect())
-        s_dst = sorted((r.word, r.freq, tuple(r.seq))
-                       for r in v_dst.collect())
-        assert s_drv == s_dst
-
-
 def test_bpe_train_empty_corpus(spark):
     docs = spark.createDataFrame([], "doc_id long, text string")
     merges, vocab = bpe_train(docs, "text", rounds=3)

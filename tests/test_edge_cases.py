@@ -84,38 +84,41 @@ def test_grouped_quantile_engines_empty_input(spark):
         assert out.count() == 0, fn.__name__
 
 
-def test_exact_quantiles_auto_all_null_and_empty(spark):
-    """Both auto routes must agree on the degenerate shapes: an all-NULL
-    column yields per-prob Nones on either engine (native percentile's
+def test_exact_quantiles_auto_all_null_and_empty(spark, monkeypatch):
+    """All auto routes must agree on the degenerate shapes: an all-NULL
+    column yields per-prob Nones on every engine (native percentile's
     NULL array is normalized), and empty input likewise."""
+    from keboola_storage_duckdb_spark.functions import util
     from keboola_storage_duckdb_spark.operators.quantiles import (
         exact_quantiles_auto)
 
     allnull = spark.createDataFrame([(None,), (None,)], "x double")
     empty = spark.createDataFrame([], "x double")
     for df in (allnull, empty):
-        for kw in ({}, {"driver_value_limit": 0, "max_rows": 0},
-                   {"driver_value_limit": 0}):
+        for routes, kw in ((True, {}), (False, {"max_rows": 0}),
+                           (False, {})):
+            monkeypatch.setattr(util, "DRIVER_ROUTES", routes)
             out = exact_quantiles_auto(df, ["x"], [0.25, 0.75], **kw)
-            assert out["x"] == [None, None], (df, kw)
+            assert out["x"] == [None, None], (df, routes, kw)
 
 
-def test_exact_quantiles_driver_route_nan_and_null(spark):
+def test_exact_quantiles_driver_route_nan_and_null(spark, monkeypatch):
     """The r16 driver-collect route must match the other engines when
     the column mixes SQL NULLs (dropped) with genuine NaN values
     (ordered above every double) — the toArrow null bitmap keeps them
     distinct where toPandas would conflate."""
     import math
 
+    from keboola_storage_duckdb_spark.functions import util
     from keboola_storage_duckdb_spark.operators.quantiles import (
         exact_quantiles_auto)
     rows = [(1.0,), (None,), (float("nan"),), (3.0,), (2.0,), (None,)]
     df = spark.createDataFrame(rows, "x double")
     probs = [0.0, 0.5, 1.0]
     drv = exact_quantiles_auto(df, ["x"], probs)
-    hist = exact_quantiles_auto(df, ["x"], probs,
-                                driver_value_limit=0, max_rows=0)
-    nat = exact_quantiles_auto(df, ["x"], probs, driver_value_limit=0)
+    monkeypatch.setattr(util, "DRIVER_ROUTES", False)
+    hist = exact_quantiles_auto(df, ["x"], probs, max_rows=0)
+    nat = exact_quantiles_auto(df, ["x"], probs)
     def norm(d):
         return [("nan" if isinstance(v, float) and math.isnan(v) else v)
                 for v in d["x"]]

@@ -1,13 +1,20 @@
 """Driver-Lloyd crossover (r16 opt): kmeans / kmeans_fit /
 pq_train_codebooks run their iteration driver-side under
-_DRIVER_LLOYD_MAX_FLOATS — these tests pin BIT-equality of centroids,
-codebooks and assignments against the distributed loop
-(driver_float_limit=0 forces it), the connected_components /
-bpe_train crossover discipline."""
+_DRIVER_LLOYD_MAX_FLOATS — these tests pin BIT-equality of centroids
+and assignments against the distributed loop (``util.DRIVER_ROUTES =
+False`` forces it; kmeans and the PQ codebooks are pinned in
+test_driver_routes.py) and the collect's refusal gates."""
 
 import pytest
 
+from keboola_storage_duckdb_spark.functions import util
 from keboola_storage_duckdb_spark.sources.tables import load_table
+
+
+def _distributed(monkeypatch, fn):
+    with monkeypatch.context() as m:
+        m.setattr(util, "DRIVER_ROUTES", False)
+        return fn()
 
 
 @pytest.fixture(scope="module")
@@ -15,60 +22,51 @@ def emb(spark):
     return load_table(spark, "/root/testdata/sf0.01", "embeddings")
 
 
-def test_kmeans_driver_equals_distributed(spark, emb):
-    from keboola_storage_duckdb_spark.functions.clustering import kmeans
-    drv = sorted(map(tuple, kmeans(emb, "vec_id", "embedding",
-                                   k=4, max_iter=10).collect()))
-    dist = sorted(map(tuple, kmeans(emb, "vec_id", "embedding", k=4,
-                                    max_iter=10,
-                                    driver_float_limit=0).collect()))
-    assert drv == dist and len(drv) > 0
-
-
-def test_kmeans_fit_driver_equals_distributed(spark, emb):
+def test_kmeans_fit_driver_equals_distributed(spark, emb, monkeypatch):
     from keboola_storage_duckdb_spark.functions.clustering import kmeans_fit
     a_drv, c_drv = kmeans_fit(emb, "vec_id", "embedding", k=8, rounds=2)
-    a_dst, c_dst = kmeans_fit(emb, "vec_id", "embedding", k=8, rounds=2,
-                              driver_float_limit=0)
+    a_dst, c_dst = _distributed(monkeypatch, lambda: kmeans_fit(
+        emb, "vec_id", "embedding", k=8, rounds=2))
     # centroids bit-equal (plain float lists on both paths)
     assert c_drv == c_dst
     assert (sorted(map(tuple, a_drv.select("id", "cluster").collect()))
             == sorted(map(tuple, a_dst.select("id", "cluster").collect())))
 
 
-def test_kmeans_fit_more_rounds_bitequal(spark, emb):
+def test_kmeans_fit_more_rounds_bitequal(spark, emb, monkeypatch):
     from keboola_storage_duckdb_spark.functions.clustering import kmeans_fit
     _, c_drv = kmeans_fit(emb, "vec_id", "embedding", k=5, rounds=4)
-    _, c_dst = kmeans_fit(emb, "vec_id", "embedding", k=5, rounds=4,
-                          driver_float_limit=0)
+    _, c_dst = _distributed(monkeypatch, lambda: kmeans_fit(
+        emb, "vec_id", "embedding", k=5, rounds=4))
     assert c_drv == c_dst
 
 
-def test_pq_codebooks_driver_equals_distributed(spark, emb):
-    from keboola_storage_duckdb_spark.functions.similarity import (
-        pq_train_codebooks)
-    cb_drv = pq_train_codebooks(emb, "vec_id", "embedding",
-                                m=4, ksub=8, dim=64, iters=2)
-    cb_dst = pq_train_codebooks(emb, "vec_id", "embedding",
-                                m=4, ksub=8, dim=64, iters=2,
-                                driver_float_limit=0)
-    assert cb_drv == cb_dst
-
-
-def test_lloyd_collect_gates(spark, emb):
-    """Size gate refuses (falls to distributed), null vectors refuse."""
+def test_lloyd_collect_gates(spark, emb, monkeypatch):
+    """Size gate refuses (falls to distributed), the switch disables,
+    null, ragged and empty vectors refuse."""
     from pyspark.sql import functions as F
 
+    from keboola_storage_duckdb_spark.functions import clustering
     from keboola_storage_duckdb_spark.functions.clustering import (
         _lloyd_collect)
     base = emb.select(F.col("vec_id").alias("id"),
                       F.col("embedding").alias("v"))
-    assert _lloyd_collect(base, 1) is None            # too many floats
-    assert _lloyd_collect(base, 0) is None            # disabled
+    with monkeypatch.context() as m:
+        m.setattr(clustering, "_DRIVER_LLOYD_MAX_FLOATS", 1)
+        assert _lloyd_collect(base) is None           # too many floats
+    with monkeypatch.context() as m:
+        m.setattr(util, "DRIVER_ROUTES", False)
+        assert _lloyd_collect(base) is None           # disabled
     withnull = base.withColumn(
         "v", F.when(F.col("id") == 0, F.lit(None)).otherwise(F.col("v")))
-    assert _lloyd_collect(withnull, 10**9) is None    # null vector
-    assert _lloyd_collect(base, 10**9) is not None
+    assert _lloyd_collect(withnull) is None           # null vector
+    ragged = base.withColumn(
+        "v", F.when(F.col("id") == 0, F.slice("v", 1, 3))
+              .otherwise(F.col("v")))
+    assert _lloyd_collect(ragged) is None             # ragged vectors
+    empty = base.withColumn("v", F.expr("slice(v, 1, 0)"))
+    assert _lloyd_collect(empty) is None              # zero-dim vectors
+    assert _lloyd_collect(base) is not None
 
 
 def test_lloyd_collect_refuses_nan_element(spark, emb):
@@ -87,7 +85,7 @@ def test_lloyd_collect_refuses_nan_element(spark, emb):
                     F.expr("transform(v, (x, i) -> "
                            "CASE WHEN i = 0 THEN NULL ELSE x END)"))
              .otherwise(F.col("v")))
-    assert _lloyd_collect(poisoned, 10**9) is None
+    assert _lloyd_collect(poisoned) is None
     # and kmeans on such input serves from the distributed loop without
     # crashing (F.avg skips the NULL element)
     out = kmeans(poisoned, "id", "v", k=2, max_iter=1).collect()
@@ -104,10 +102,10 @@ def test_lloyd_collect_refuses_non_float32_exact(spark):
     rows = [(i, [1.0 + 1e-12 * i, 2.0 ** (-30 + i), 0.1])
             for i in range(12)]
     df = spark.createDataFrame(rows, "id bigint, v array<double>")
-    assert _lloyd_collect(df, 10**9) is None
+    assert _lloyd_collect(df) is None
     # the same magnitudes rounded to float32 pass
     import numpy as np
     rows32 = [(i, [float(np.float32(v)) for v in vec])
               for i, vec in rows]
     df32 = spark.createDataFrame(rows32, "id bigint, v array<double>")
-    assert _lloyd_collect(df32, 10**9) is not None
+    assert _lloyd_collect(df32) is not None

@@ -111,16 +111,24 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def test_pack_sequences_never_single_partition(spark, sf_dir):
-    """The packing exclusive scan must stay partition-parallel: no
+def test_pack_sequences_never_single_partition(spark, sf_dir,
+                                               monkeypatch):
+    """The distributed packing exclusive scan (the form past the driver
+    bound — the 100 TB path) must stay partition-parallel: no
     SinglePartition exchange (the naive global-window cumsum plans
     `Exchange SinglePartition` — the classic 100 TB scale-killer) and
-    the window must be keyed by the partition id."""
+    the window must be keyed by the partition id. Under the bound the
+    gated form is one bounded driver collect, planned as a local table."""
+    from keboola_storage_duckdb_spark.functions import util
+
+    gated = E.q_pack_sequences(spark, sf_dir)
+    plan = gated._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    monkeypatch.setattr(util, "DRIVER_ROUTES", False)
     df = E.q_pack_sequences(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, plan
-    assert "windowspecdefinition(pid" in plan.lower().replace(" ", "") \
-        or "pid" in plan, plan
+    assert "windowspecdefinition(pid" in plan.lower().replace(" ", ""), plan
 
 
 def test_range_join_is_hash_join_not_nested_loop(spark, sf_dir):
@@ -295,13 +303,15 @@ def test_cosine_near_dup_unblocked_is_crossjoin_free(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_cosine_blocked_adaptive_kernel_routing(spark, sf_dir):
+def test_cosine_blocked_adaptive_kernel_routing(spark, sf_dir,
+                                                monkeypatch):
     """r14: the blocked cosine join is kernel-adaptive — below the
     broadcast gate the per-block dot products run through the BLAS
     candidate stage (MapInPandas, broadcast-hash verify); past the gate
     it must fall back to the co-partitioned per-block JOIN (a huge
     block's quadratic work must distribute across the cluster, not pin
     one Arrow task). Both ends pinned."""
+    from keboola_storage_duckdb_spark.functions import similarity
     from keboola_storage_duckdb_spark.functions.similarity import (
         cosine_near_dup_pairs)
     from keboola_storage_duckdb_spark.sources.tables import load_table
@@ -312,8 +322,9 @@ def test_cosine_blocked_adaptive_kernel_routing(spark, sf_dir):
     plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan, plan
     assert "CartesianProduct" not in plan, plan
+    monkeypatch.setattr(similarity, "_COSINE_BROADCAST_MAX_ROWS", 1)
     big = cosine_near_dup_pairs(emb, "vec_id", "embedding", 0.35,
-                                block_col="label", blocked_gemm_limit=1)
+                                block_col="label")
     plan = big._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan, plan
     assert "CartesianProduct" not in plan, plan

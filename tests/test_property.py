@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import operator
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -307,15 +308,17 @@ def test_exact_quantiles_model(spark, vals, probs, bins, max_inbin):
     got = exact_quantiles(df, ["x"], probs, bins=bins, max_inbin=max_inbin)
     assert got["x"] == list(ref)
     # the auto route must be bit-identical on ALL THREE engine choices:
-    # default = driver collect (r16), driver_value_limit=0 + max_rows=0
-    # forces the bounded path, driver_value_limit=0 alone the native
+    # default = driver collect; with the driver routes off,
+    # max_rows=0 forces the bounded path and the default the native
+    from keboola_storage_duckdb_spark.functions import util
     from keboola_storage_duckdb_spark.operators.quantiles import (
         exact_quantiles_auto)
-    for kw in ({}, {"driver_value_limit": 0, "max_rows": 0},
-               {"driver_value_limit": 0}):
-        auto = exact_quantiles_auto(df, ["x"], probs, bins=bins,
-                                    max_inbin=max_inbin, **kw)
-        assert auto["x"] == list(ref), f"route={kw}"
+    for routes, kw in ((True, {}), (False, {"max_rows": 0}), (False, {})):
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(util, "DRIVER_ROUTES", routes)
+            auto = exact_quantiles_auto(df, ["x"], probs, bins=bins,
+                                        max_inbin=max_inbin, **kw)
+        assert auto["x"] == list(ref), f"route={routes, kw}"
 
 
 @given(rows=st.lists(

@@ -6,6 +6,8 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from keboola_storage_duckdb_spark.functions import dedup_ml, util
+
 TS0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
 
 
@@ -168,6 +170,13 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _candidate_routes(monkeypatch, fn, *args, **kw):
+    """``fn`` with the driver routes off: the candidate-join routes."""
+    with monkeypatch.context() as m:
+        m.setattr(util, "DRIVER_ROUTES", False)
+        return fn(*args, **kw)
+
+
 def test_containment_finds_quoted_subset(spark):
     from keboola_storage_duckdb_spark.functions.dedup_ml import (
         ngram_containment_pairs)
@@ -212,7 +221,7 @@ def test_containment_hashed_equals_string_path(spark):
     assert a == b and len(a) == 56
 
 
-def test_jaccard_brute_route_equals_candidate_routes(spark):
+def test_jaccard_brute_route_equals_candidate_routes(spark, monkeypatch):
     """r17 opt: the candidate-free jaccard GEMM route must emit
     bit-identical rows to the prefix-filtered candidate route, on the
     hashed AND string verify paths, with adaptive on."""
@@ -223,13 +232,13 @@ def test_jaccard_brute_route_equals_candidate_routes(spark):
     for kw in ({"adaptive": True}, {"hashed_verify": False}):
         brute = sorted(map(tuple, ngram_jaccard_prefix_pairs(
             docs, "doc_id", "text", threshold=0.8, **kw).collect()))
-        cand = sorted(map(tuple, ngram_jaccard_prefix_pairs(
-            docs, "doc_id", "text", threshold=0.8,
-            brute_cells_limit=0, **kw).collect()))
+        cand = sorted(map(tuple, _candidate_routes(
+            monkeypatch, ngram_jaccard_prefix_pairs,
+            docs, "doc_id", "text", threshold=0.8, **kw).collect()))
         assert brute == cand and len(brute) > 0, kw
 
 
-def test_jaccard_brute_degenerate_inputs(spark):
+def test_jaccard_brute_degenerate_inputs(spark, monkeypatch):
     """Duplicate ids never self-pair; shingle-free docs pair with
     nothing; output ids are (min, max)-ordered like the candidate
     route's id_a < id_b."""
@@ -238,14 +247,15 @@ def test_jaccard_brute_degenerate_inputs(spark):
     text = "alpha beta gamma delta epsilon zeta eta"
     docs = _docs(spark, [(1, text), (1, text), (2, text), (3, "tiny"),
                          (4, None)])
-    for kw in ({}, {"brute_cells_limit": 0}):
+    for routes in (True, False):
+        monkeypatch.setattr(util, "DRIVER_ROUTES", routes)
         got = {(r.id_a, r.id_b, r.jaccard) for r in
                ngram_jaccard_prefix_pairs(docs, "doc_id", "text",
-                                          threshold=0.8, **kw).collect()}
-        assert got == {(1, 2, 1.0)}, kw
+                                          threshold=0.8).collect()}
+        assert got == {(1, 2, 1.0)}, routes
 
 
-def test_jaccard_brute_adaptive_density_refuses(spark):
+def test_jaccard_brute_adaptive_density_refuses(spark, monkeypatch):
     """When the Σdf² probe would reroute the candidate path to the
     sub-recall LSH form, the (exact) brute route must refuse and let the
     adaptive routing decide — both forms give the same rows."""
@@ -256,13 +266,14 @@ def test_jaccard_brute_adaptive_density_refuses(spark):
     a = sorted(map(tuple, ngram_jaccard_prefix_pairs(
         docs, "doc_id", "text", threshold=0.8, adaptive=True,
         density_limit=10).collect()))
-    b = sorted(map(tuple, ngram_jaccard_prefix_pairs(
+    b = sorted(map(tuple, _candidate_routes(
+        monkeypatch, ngram_jaccard_prefix_pairs,
         docs, "doc_id", "text", threshold=0.8, adaptive=True,
-        density_limit=10, brute_cells_limit=0).collect()))
+        density_limit=10).collect()))
     assert a == b and len(a) > 0
 
 
-def test_containment_brute_degenerate_inputs(spark):
+def test_containment_brute_degenerate_inputs(spark, monkeypatch):
     """ADVICE r16: the brute GEMM route must match the candidate routes
     on degenerate inputs — min_shingles=0 empty shingle sets pair with
     NOTHING (the accept is vacuously true at na=0 otherwise), and
@@ -273,18 +284,19 @@ def test_containment_brute_degenerate_inputs(spark):
     text = "alpha beta gamma delta epsilon zeta eta"
     # doc 3 has ZERO shingles (single token); min_shingles=0 admits it
     docs = _docs(spark, [(1, text), (2, text), (3, "tiny")])
-    for kw in ({}, {"brute_cells_limit": 0}):
+    for routes in (True, False):
+        monkeypatch.setattr(util, "DRIVER_ROUTES", routes)
         got = {(r["contained"], r["container"]) for r in
                ngram_containment_pairs(docs, "doc_id", "text",
-                                       min_shingles=0, **kw).collect()}
-        assert got == {(1, 2), (2, 1)}, kw
+                                       min_shingles=0).collect()}
+        assert got == {(1, 2), (2, 1)}, routes
     # duplicate ids: two rows both id=1 with identical text
     dup = _docs(spark, [(1, text), (1, text), (2, text)])
-    for kw in ({}, {"brute_cells_limit": 0}):
+    for routes in (True, False):
+        monkeypatch.setattr(util, "DRIVER_ROUTES", routes)
         got = {(r["contained"], r["container"]) for r in
-               ngram_containment_pairs(dup, "doc_id", "text",
-                                       **kw).collect()}
-        assert got == {(1, 2), (2, 1)}, kw
+               ngram_containment_pairs(dup, "doc_id", "text").collect()}
+        assert got == {(1, 2), (2, 1)}, routes
 
 
 def test_fuzzy_variant_cap_subrecall(spark):
@@ -319,7 +331,8 @@ def test_containment_df_cap_subrecall_and_noop(spark):
     assert low == 0                            # cap 0 drops every posting
 
 
-def test_containment_dense_mask_route_equals_array_route(spark):
+def test_containment_dense_mask_route_equals_array_route(spark,
+                                                          monkeypatch):
     """All THREE routes (r16: brute GEMM default, candidate+mask join,
     candidate+array join) emit identical rows."""
     from keboola_storage_duckdb_spark.functions.dedup_ml import (
@@ -328,19 +341,18 @@ def test_containment_dense_mask_route_equals_array_route(spark):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     brute = {tuple(r) for r in
              ngram_containment_pairs(docs, "doc_id", "text").collect()}
+    monkeypatch.setattr(util, "DRIVER_ROUTES", False)
     dense = {tuple(r) for r in
-             ngram_containment_pairs(docs, "doc_id", "text",
-                                     brute_cells_limit=0).collect()}
+             ngram_containment_pairs(docs, "doc_id", "text").collect()}
+    monkeypatch.setattr(dedup_ml, "_DENSE_VOCAB_MAX", 0)
     array = {tuple(r) for r in
-             ngram_containment_pairs(docs, "doc_id", "text",
-                                     brute_cells_limit=0,
-                                     dense_vocab_limit=0).collect()}
+             ngram_containment_pairs(docs, "doc_id", "text").collect()}
     assert brute == dense == array and len(brute) == 56
 
 
-def test_containment_brute_sparse_fallthrough(spark):
+def test_containment_brute_sparse_fallthrough(spark, monkeypatch):
     """When the byte gate admits the collect but the corpus turns out
-    sparse (vocab > dense_vocab_limit), the brute helper returns None and
+    sparse (vocab > _DENSE_VOCAB_MAX), the brute helper returns None and
     the candidate-join routes serve — rows identical either way."""
     from keboola_storage_duckdb_spark.functions.dedup_ml import (
         ngram_containment_pairs)
@@ -349,13 +361,13 @@ def test_containment_brute_sparse_fallthrough(spark):
         (1, " ".join(words[:20])),
         (2, " ".join(words[:18])),          # contained in 1
         (3, " ".join(words[20:40]))])
-    # vocab is ~37 distinct bigrams; dense_vocab_limit=8 forces the
-    # post-collect fall-through (and the join side routes to arrays)
-    fell = {tuple(r) for r in
-            ngram_containment_pairs(docs, "doc_id", "text",
-                                    dense_vocab_limit=8).collect()}
     brute = {tuple(r) for r in
              ngram_containment_pairs(docs, "doc_id", "text").collect()}
+    # vocab is ~37 distinct bigrams; a vocabulary bound of 8 forces the
+    # post-collect fall-through (and the join side routes to arrays)
+    monkeypatch.setattr(dedup_ml, "_DENSE_VOCAB_MAX", 8)
+    fell = {tuple(r) for r in
+            ngram_containment_pairs(docs, "doc_id", "text").collect()}
     assert fell == brute and (2, 1) in {(a, b) for a, b, *_ in fell}
 
 

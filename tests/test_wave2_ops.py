@@ -63,37 +63,24 @@ def test_connected_components_chain_converges(spark):
     assert len(got) == 13
 
 
-def test_connected_components_long_chain_needs_pointer_jump(spark):
+def test_connected_components_long_chain_needs_pointer_jump(spark,
+                                                            monkeypatch):
     # A 60-node path converges within max_iter=25 ONLY because pointer
     # jumping (enabled from round jump_from=2) doubles label reach per
     # round; plain min-propagation moves one hop per round.
-    # driver_limit=0 forces the distributed loop (the default would take
-    # the driver union-find fast path on a graph this small).
+    # The driver routes off force the distributed loop (the default would
+    # take the driver union-find fast path on a graph this small).
+    from keboola_storage_duckdb_spark.functions import util
     from keboola_storage_duckdb_spark.functions.graph import connected_components
+
+    monkeypatch.setattr(util, "DRIVER_ROUTES", False)
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(60)], ["id_a", "id_b"])
     got = {r.id: r.cluster for r in
-           connected_components(edges, driver_limit=0).collect()}
+           connected_components(edges).collect()}
     assert set(got.values()) == {0}
     assert len(got) == 61
-
-
-def test_connected_components_driver_path_equals_distributed(spark):
-    # the small-graph driver union-find must be row-identical to the
-    # distributed label loop, including string ids and singleton-free
-    # vertex coverage
-    from keboola_storage_duckdb_spark.functions.graph import connected_components
-
-    edges = spark.createDataFrame(
-        [("d", "b"), ("b", "a"), ("x", "y"), ("q", "q")],
-        ["id_a", "id_b"])
-    fast = {(r.id, r.cluster) for r in
-            connected_components(edges).collect()}
-    slow = {(r.id, r.cluster) for r in
-            connected_components(edges, driver_limit=0).collect()}
-    assert fast == slow
-    assert ("d", "a") in fast and ("y", "x") in fast and ("q", "q") in fast
 
 
 def test_pattern_counts_detects(spark):

@@ -37,10 +37,11 @@ def test_quota_sample_budgets_and_edges(spark, sf_dir):
         assert bk[("en", r.sample_rank)] == r.id
 
 
-def test_quota_sample_prefilter_is_exact(spark, sf_dir):
+def test_quota_sample_prefilter_is_exact(spark, sf_dir, monkeypatch):
     """The hash-threshold scale path returns BIT-IDENTICAL rows to the
-    naive full-rank form (the guard's contract), including the
-    over-quota and tiny-quota shapes."""
+    naive full-rank form (the guard's contract) and to the driver route,
+    including the over-quota and tiny-quota shapes."""
+    from keboola_storage_duckdb_spark.functions import util
     from keboola_storage_duckdb_spark.functions.sketch import quota_sample
 
     docs = load_table(spark, sf_dir, "documents")
@@ -48,13 +49,16 @@ def test_quota_sample_prefilter_is_exact(spark, sf_dir):
     driver = {(r.g, r.sample_rank): (r.id, r.quota) for r in
               quota_sample(docs, "lang", "doc_id", quotas,
                            prefilter=True).collect()}
+    # the driver routes off: the prefilter and the naive distributed forms
+    monkeypatch.setattr(util, "DRIVER_ROUTES", False)
     thresh = {(r.g, r.sample_rank): (r.id, r.quota) for r in
               quota_sample(docs, "lang", "doc_id", quotas,
-                           prefilter=True, driver_row_limit=0).collect()}
+                           prefilter=True).collect()}
     naive = {(r.g, r.sample_rank): (r.id, r.quota) for r in
              quota_sample(docs, "lang", "doc_id", quotas,
-                          prefilter=False, driver_row_limit=0).collect()}
+                          prefilter=False).collect()}
     assert driver == thresh == naive and len(driver) > 0
+    monkeypatch.undo()
 
     # r17 opt: precomputed sizes skip the probe but change nothing —
     # on the driver route AND the hash-threshold route
@@ -63,10 +67,10 @@ def test_quota_sample_prefilter_is_exact(spark, sf_dir):
     sized = {(r.g, r.sample_rank): (r.id, r.quota) for r in
              quota_sample(docs, "lang", "doc_id", quotas,
                           prefilter=True, sizes=counts).collect()}
+    monkeypatch.setattr(util, "DRIVER_ROUTES", False)
     sized_t = {(r.g, r.sample_rank): (r.id, r.quota) for r in
                quota_sample(docs, "lang", "doc_id", quotas,
-                            prefilter=True, sizes=counts,
-                            driver_row_limit=0).collect()}
+                            prefilter=True, sizes=counts).collect()}
     assert sized == sized_t == naive
 
 

@@ -1,6 +1,7 @@
-"""Probe the connected_components driver union-find ceiling (VERDICT
-r15 #7): wall + driver RSS at 1M/2M/5M/10M edges so driver_limit is a
-measured constant, not a guess.
+"""Probe the connected_components driver union-find ceiling: wall +
+driver RSS at 1M/2M/5M/10M edges so the driver route's bounds
+(graph._CC_DRIVER_MAX_ROWS / _CC_DRIVER_MAX_BYTES) are measured
+constants, not guesses.
 
 Edges are synthetic chains+cliques with string ids shaped like the
 minhash pair graphs (doc-<n>). Measures (a) the pure-Python union-find
@@ -34,12 +35,16 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from keboola_storage_duckdb_spark.functions import graph
     from keboola_storage_duckdb_spark.functions.graph import (
         connected_components)
     from keboola_storage_duckdb_spark.session import get_spark
 
     spark = get_spark(app_name="probe_unionfind")
     spark.sparkContext.setLogLevel("ERROR")
+    # raise the driver route's bounds to cover every probed size
+    graph._CC_DRIVER_MAX_ROWS = max(args.sizes) + 1
+    graph._CC_DRIVER_MAX_BYTES = 8 << 30
 
     for n in args.sizes:
         # half chain edges (worst diameter), half clique-star edges
@@ -53,8 +58,7 @@ def main() -> None:
         df = df.localCheckpoint()           # isolate build cost
         rss0 = _rss_mb()
         t0 = time.perf_counter()
-        out = connected_components(df, driver_limit=max(args.sizes) + 1,
-                                   driver_byte_limit=8 << 30)
+        out = connected_components(df)
         n_out = out.count()
         dt = time.perf_counter() - t0
         print(f"edges={n:>9,} wall={dt:6.1f}s vertices={n_out:,} "

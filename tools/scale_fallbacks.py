@@ -1,5 +1,5 @@
-"""Scaling evidence for the driver-crossover FALLBACK paths (VERDICT
-r16 #5 / next-round #7): force every crossover gate off and run the
+"""Scaling evidence for the driver-crossover FALLBACK paths: force every
+crossover gate off (``util.DRIVER_ROUTES = False``) and run the
 distributed forms of the changed operators on the 10x fixtures
 (.tmp/scale_smoke, built by tools/scale_smoke.py) at the core count in
 $SPARK_GRAFT_CPUS. Run once at 32 and once at 8 cores; the wall ratios
@@ -27,6 +27,7 @@ ONLY = set(sys.argv[1:])
 def main() -> None:
     from pyspark.sql import functions as F  # noqa: F401
 
+    from keboola_storage_duckdb_spark.functions import util
     from keboola_storage_duckdb_spark.functions.clustering import kmeans
     from keboola_storage_duckdb_spark.functions.dedup_ml import (
         ngram_containment_pairs, ngram_jaccard_prefix_pairs, simhash)
@@ -40,6 +41,7 @@ def main() -> None:
     from keboola_storage_duckdb_spark.session import get_spark
     from keboola_storage_duckdb_spark.sources.tables import load_table
 
+    util.DRIVER_ROUTES = False          # every op below runs distributed
     spark = get_spark(app_name="scale-fallbacks")
     spark.sparkContext.setLogLevel("ERROR")
     if not os.path.isdir(DST):
@@ -57,37 +59,30 @@ def main() -> None:
     ops = {
         # r16 Lloyd crossover fallbacks (distributed Lloyd loop)
         "kmeans_dist": lambda: noop(kmeans(
-            emb, "vec_id", "embedding", k=4, max_iter=10,
-            driver_float_limit=0)),
+            emb, "vec_id", "embedding", k=4, max_iter=10)),
         "pq_train_dist": lambda: pq_train_codebooks(
-            emb, "vec_id", "embedding", m=4, ksub=8, dim=64, iters=2,
-            driver_float_limit=0),
+            emb, "vec_id", "embedding", m=4, ksub=8, dim=64, iters=2),
         # r16 quantile crossover fallback (bounded histogram engine)
         "quantiles_hist": lambda: exact_quantiles_auto(
             li, ["l_quantity", "l_extendedprice", "l_discount"],
-            [0.01, 0.25, 0.5, 0.75, 0.99], driver_value_limit=0,
-            max_rows=0),
+            [0.01, 0.25, 0.5, 0.75, 0.99], max_rows=0),
         # r16 quota crossover fallback (hash-threshold prefilter + rank)
         "quota_threshold": lambda: noop(quota_sample(
-            docs, "lang", "doc_id", {"en": 300, "de": 200, "fr": 100},
-            driver_row_limit=0)),
+            docs, "lang", "doc_id", {"en": 300, "de": 200, "fr": 100})),
         # r17 exclusive-scan crossover fallbacks (two-phase scan)
         "corpus_shards_dist": lambda: noop(corpus_shards(
-            docs, "doc_id", n_shards=8, driver_row_limit=0)),
+            docs, "doc_id", n_shards=8)),
         "pack_stream_dist": lambda: noop(pack_token_stream(
-            docs, "doc_id", "text", max_len=2048, driver_row_limit=0)),
+            docs, "doc_id", "text", max_len=2048)),
         "epoch_plan_dist": lambda: noop(epoch_plan(
-            docs, "lang", "doc_id", "text", budget=200,
-            driver_row_limit=0)),
+            docs, "lang", "doc_id", "text", budget=200)),
         # r16/r17 brute-GEMM fallbacks (candidate joins; the 10x corpus
         # trips the adaptive density cap -> the LSH sub-recall route,
         # and containment runs the documented df-capped form)
         "jaccard_cand": lambda: noop(ngram_jaccard_prefix_pairs(
-            docs, "doc_id", "text", threshold=0.8, adaptive=True,
-            brute_cells_limit=0)),
+            docs, "doc_id", "text", threshold=0.8, adaptive=True)),
         "containment_cand": lambda: noop(ngram_containment_pairs(
-            docs, "doc_id", "text", max_doc_freq=200,
-            brute_cells_limit=0)),
+            docs, "doc_id", "text", max_doc_freq=200)),
         # r17 Arrow simhash (a distributed map, no gate — its scaling IS
         # the claim) vs the JVM fold twin
         "simhash_arrow": lambda: noop(simhash(docs, "doc_id", "text")),
